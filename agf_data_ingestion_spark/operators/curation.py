@@ -227,6 +227,8 @@ def stage_quality_cut(
     docs: DataFrame,
     cut_tile: int,
     _route: int | None = None,
+    *,
+    caches: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Trained-quality threshold: score each surviving document's REAL
     text with the planted-corpus model (hashed character-bigram weights,
@@ -251,7 +253,9 @@ def stage_quality_cut(
     uncached each replayed the whole real-text bigram scoring pass, i.e.
     the release paid the corpus bigram explode twice.  The cache is the
     narrow (doc_id, lang, _score) per-doc frame (the r4 rule); one
-    scoring pass per release."""
+    scoring pass per release.  Every frame this stage caches is appended
+    to ``caches`` when given: the caller unpersists them once both
+    consumers have run (`curate_full` does)."""
     from agf_data_ingestion_spark.operators.skew import (
         max_group_count,
         ntile_expr,
@@ -267,6 +271,8 @@ def stage_quality_cut(
     if route > _CUT_LANG_ROUTE:
         # narrow per-doc frame, multiply consumed by the decomposition
         sd = sd.cache()
+        if caches is not None:
+            caches.append(sd)
         tiled = salted_rank_intkey(
             sd, ["lang"], "_score", "doc_id"
         ).withColumn("_tile", ntile_expr("dr", "n_part", _CUT_TILES))
@@ -282,6 +288,8 @@ def stage_quality_cut(
         .select("doc_id", "lang", "_score")
         .cache()
     )
+    if caches is not None:
+        caches.append(kept)
     thresholds = kept.groupBy("lang").agg(
         F.min("_score").cast("long").alias("value")
     )
@@ -328,13 +336,23 @@ def curate_full(
 
     t_run = time.time()
     stages: list[dict] = []
+    # each stage's wall runs from the end of the previous stage (the _seg
+    # pattern of curate_incremental), so the work of BUILDING a stage frame
+    # counts too — docs_dup_clusters runs its connected-components jobs
+    # before the neardup checkpoint starts — and the stage walls add up to
+    # the run's wall_s, less the report tail
+    _lap_t = [t_run]
+
+    def _stage_done(name: str, rows_out: int) -> None:
+        now = time.time()
+        stages.append(
+            {"name": name, "rows_out": rows_out, "wall_s": round(now - _lap_t[0], 3)}
+        )
+        _lap_t[0] = now
 
     def _checkpointed(name: str, df: DataFrame) -> DataFrame:
-        t0 = time.time()
         out = df.select(*_DOC_COLS).localCheckpoint(eager=True)
-        stages.append(
-            {"name": name, "rows_out": out.count(), "wall_s": round(time.time() - t0, 3)}
-        )
+        _stage_done(name, out.count())
         return out
 
     docs = _checkpointed("input", t(spark, sf_dir, "documents"))
@@ -343,7 +361,6 @@ def curate_full(
     docs = _checkpointed("neardup", stage_neardup(spark, sf_dir, docs))
     docs = _checkpointed("decontam", stage_decontam(spark, sf_dir, docs))
 
-    t0 = time.time()
     cut = pick_cut_tile(spark, sf_dir)
     # r13 (the r12 guard-folding rule applied to the quality-cut window):
     # the decontam stage count just materialized is an upper bound on
@@ -351,26 +368,29 @@ def curate_full(
     # the guard job proves nothing the count didn't (both branches are
     # bit-identical; the guard only picks the plan)
     n_dec = stages[-1]["rows_out"]
+    qcut_caches: list[DataFrame] = []
     cut_docs, thresholds = stage_quality_cut(
         spark, sf_dir, docs, cut,
         _route=(n_dec if n_dec <= _CUT_LANG_ROUTE else None),
+        caches=qcut_caches,
     )
     thresh_rows = {r["lang"]: int(r["value"]) for r in thresholds.collect()}
     docs = _checkpointed("quality_cut", cut_docs)
-    stages[-1]["wall_s"] = round(time.time() - t0, 3)  # include curve pick
+    # both consumers of the quality-cut caches (the thresholds collect and
+    # the survivors checkpoint) have run: release them so a long-lived
+    # session's CacheManager does not grow by a release's worth per call
+    # (the curate_incremental rule)
+    for _c in qcut_caches:
+        _c.unpersist()
     n_cut = stages[-1]["rows_out"]
 
-    t0 = time.time()
     weights = domain_reweight_frame(docs).select("source", "weight_ppm")
     wrows = {r["source"]: int(r["weight_ppm"]) for r in weights.collect()}
     weights = spark.createDataFrame(
         sorted(wrows.items()), "source string, weight_ppm long"
     )
-    stages.append(
-        {"name": "doremi_weights", "rows_out": len(wrows), "wall_s": round(time.time() - t0, 3)}
-    )
+    _stage_done("doremi_weights", len(wrows))
 
-    t0 = time.time()
     # r12 (VERDICT r11 ask #7, the curriculum guard-folding rule): the
     # interleave's skew-route guard is max-docs-per-source, and the
     # quality-cut stage count just materialized is an UPPER BOUND on it —
@@ -393,9 +413,7 @@ def curate_full(
     ).drop("_wfq", "_t", "weight_ppm")
     assigned = assigned.localCheckpoint(eager=True)
     n_final = assigned.count()
-    stages.append(
-        {"name": "wfq_shards", "rows_out": n_final, "wall_s": round(time.time() - t0, 3)}
-    )
+    _stage_done("wfq_shards", n_final)
 
     # release datacard: the standard sections over the FINAL corpus plus
     # the funnel itself (one row per stage) — the provenance a release
@@ -471,7 +489,6 @@ def curate_full(
     bench_tbl = os.path.join(out_root, "stores", "bench")
     policy_tbl = os.path.join(out_root, "policy")
 
-    t0 = time.time()
     versions = snapshot_multi_write(
         [
             (assigned, shards_tbl),
@@ -506,14 +523,11 @@ def curate_full(
             {postings_tbl: index_cluster_files} if index_cluster_files else None
         ),
     )
-    stages.append(
-        {"name": "publish", "rows_out": n_final, "wall_s": round(time.time() - t0, 3)}
-    )
+    _stage_done("publish", n_final)
 
     # txn-aligned read-back: all ten tables resolve to the SAME publish
     # event, and the shards table round-trips the exact row count — the
     # "did the release land whole" check a consumer would run
-    t0 = time.time()
     all_tbls = [
         shards_tbl,
         lineage_tbl,
@@ -532,13 +546,11 @@ def curate_full(
         raise AssertionError(
             f"curate_full: published shards read back {n_read} rows, expected {n_final}"
         )
-    stages.append(
-        {"name": "txn_read_verify", "rows_out": n_read, "wall_s": round(time.time() - t0, 3)}
-    )
-
     tok_row = assigned.agg(
         F.max("shard_id").alias("m"), F.sum("n_tokens").alias("t")
     ).collect()[0]
+    _stage_done("txn_read_verify", n_read)
+
     return {
         "stages": stages,
         "cut_tile": cut,
@@ -975,9 +987,17 @@ def curate_incremental(
         spark, cands.select("dup_of"), tbls["sets"], "doc_id"
     )
     store_sets = store_sets.select("doc_id", "sset")
-    flagged = best_jaccard_matches(
-        cands, sets_all, sets_all.unionByName(store_sets)
-    ).select(F.col("new_id").alias("doc_id"))
+    # dup side: the published set wins where a batch doc reuses a
+    # published id.  Such a doc dropped at exact dedup with different text
+    # stays in sets_all, and scoring a candidate against it as well as the
+    # published set it was banded against could flag the candidate
+    # wrongly.
+    dup_sets = store_sets.unionByName(
+        sets_all.join(store_sets.select("doc_id"), "doc_id", "left_anti")
+    )
+    flagged = best_jaccard_matches(cands, sets_all, dup_sets).select(
+        F.col("new_id").alias("doc_id")
+    )
     docs = _stage("neardup", docs.join(flagged, "doc_id", "left_anti"))
 
     # ---- decontamination vs the PUBLISHED benchmark shingle store ----

@@ -6,10 +6,19 @@ the three tables filtered by their per-table timestamp (:128-166), and take
 set differences both ways (:65-66); report counts plus a sorted 20-key
 sample each way (:203-272).
 
-Spark shape: two ``left_anti`` joins over union-distinct projections — the
-paginated single-threaded scans the reference needed a 900 s budget for
-become one parallel batch job. The time-window filters land on partition /
-min-max pruned Parquet scans.
+Spark shape: one keyed pass.  Storage rows are tagged ``(key, 1, 0)`` and
+tracked rows ``(key, 0, 1)``; the union is grouped by key into a narrow
+``(key, n_storage, n_tracked)`` frame that is cached for the audit.  One
+aggregate over it yields all four counts and each sorted sample is a
+``filter → orderBy → limit`` over it, so each side is scanned once with one
+shuffle — not once per count, sample and overflow count behind two
+anti-joins.  The paginated single-threaded scans the reference needed a
+900 s budget for become one parallel batch job; the time-window filters
+land on partition / min-max pruned Parquet scans.
+
+Anti-join semantics are kept exactly: counts include duplicate keys, a NULL
+key never matches the other side (so it is an orphan on its own side), and
+samples sort ascending with NULLs first, repeating a duplicated key.
 """
 
 from __future__ import annotations
@@ -113,37 +122,68 @@ class ReconciliationResult:
 def _audit(
     s: DataFrame,
     t: DataFrame,
-    orphan_s: DataFrame,
-    orphan_t: DataFrame,
     sample: int,
+    *,
+    match: DataFrame | None = None,
 ) -> ReconciliationResult:
     """Counts + top-``sample`` sorted keys per side (OP-SORT-LIMIT,
-    reference :229-243); one extra count only when the sample overflows."""
-    cnt_s, cnt_t = s.count(), t.count()
-    o_s = orphan_s.orderBy("key").limit(sample + 1).collect()
-    o_t = orphan_t.orderBy("key").limit(sample + 1).collect()
-    n_os = orphan_s.count() if len(o_s) > sample else len(o_s)
-    n_ot = orphan_t.count() if len(o_t) > sample else len(o_t)
-    return ReconciliationResult(
-        storage_count=cnt_s,
-        tracked_count=cnt_t,
-        orphaned_in_storage=n_os,
-        orphaned_in_db=n_ot,
-        sample_storage=[r["key"] for r in o_s[:sample]],
-        sample_db=[r["key"] for r in o_t[:sample]],
-    )
+    reference :229-243) from one keyed pass over both sides.
+
+    A storage key is orphaned unless ``match`` (default: ``t`` itself)
+    holds it; a tracked key is orphaned unless ``s`` holds it.  NULL keys
+    match nothing, as in a ``left_anti`` join."""
+    # storage keys are matched by the tracked side itself (n_t), or by a
+    # third tagged set (n_m); `tag` drops counters beyond ``cols``
+    cols = ["n_s", "n_t"] if match is None else ["n_s", "n_t", "n_m"]
+
+    def tag(df: DataFrame, *ns: int) -> DataFrame:
+        return df.select("key", *[F.lit(n).alias(c) for n, c in zip(ns, cols)])
+
+    tagged = tag(s, 1, 0, 0).unionByName(tag(t, 0, 1, 0))
+    if match is not None:
+        tagged = tagged.unionByName(tag(match, 0, 0, 1))
+    frame = tagged.groupBy("key").agg(*[F.sum(c).alias(c) for c in cols]).cache()
+    n_s, n_t, n_m = F.col("n_s"), F.col("n_t"), F.col(cols[-1])
+    null = F.col("key").isNull()
+    orphan_s = (n_s > 0) & (null | (n_m == 0))
+    orphan_t = (n_t > 0) & (null | (n_s == 0))
+
+    def sample_keys(cond, n, total: int) -> list:
+        if total == 0 or sample <= 0:
+            return []
+        rows = (
+            frame.filter(cond)
+            .orderBy("key")
+            .limit(sample)
+            .select(F.array_repeat("key", F.least(n, F.lit(sample)).cast("int")).alias("k"))
+            .collect()
+        )
+        return [k for r in rows for k in r["k"]][:sample]
+
+    try:
+        row = frame.agg(
+            F.sum(n_s), F.sum(n_t), F.sum(F.when(orphan_s, n_s)), F.sum(F.when(orphan_t, n_t))
+        ).first()
+        cnt_s, cnt_t, n_os, n_ot = (int(v or 0) for v in row)
+        return ReconciliationResult(
+            storage_count=cnt_s,
+            tracked_count=cnt_t,
+            orphaned_in_storage=n_os,
+            orphaned_in_db=n_ot,
+            sample_storage=sample_keys(orphan_s, n_s, n_os),
+            sample_db=sample_keys(orphan_t, n_t, n_ot),
+        )
+    finally:
+        frame.unpersist()
 
 
 def reconcile(
     storage_keys: DataFrame, tracked: DataFrame, *, sample: int = 20
 ) -> ReconciliationResult:
-    """Anti-joins both directions (OP-JOIN-ANTI-S3 / OP-JOIN-ANTI-DB) +
-    ordered samples (OP-SORT-LIMIT, reference :229-243)."""
-    s = storage_keys.select("key")
-    t = tracked.select("key")
-    orphan_s = s.join(t, "key", "left_anti")
-    orphan_t = t.join(s, "key", "left_anti")
-    return _audit(s, t, orphan_s, orphan_t, sample)
+    """Orphans both directions (OP-JOIN-ANTI-S3 / OP-JOIN-ANTI-DB) +
+    ordered samples (OP-SORT-LIMIT, reference :229-243), in one keyed
+    pass (see the module docstring)."""
+    return _audit(storage_keys.select("key"), tracked.select("key"), sample)
 
 
 def format_report(res: ReconciliationResult, generated_at: str) -> str:
@@ -193,11 +233,11 @@ def reconcile_incremental(
     full-scan audit (reference agf_reconciliation_lambda.py) becomes an
     incremental one.
 
-    Two asymmetric anti-joins:
+    The keyed pass of `reconcile` with asymmetric sides:
 
     * **DB side** (tracked → storage): only keys *inserted since v_from*
       are checked against storage — cost basis |changes|, not |table|.
-    * **storage side** (storage → tracked): anti-joined against the FULL
+    * **storage side** (storage → tracked): matched against the FULL
       current tracked key set.  Using the delta here would flag every
       object tracked before v_from as orphaned (a false positive on a
       perfectly in-sync table); the current set is read via
@@ -226,7 +266,4 @@ def reconcile_incremental(
         .filter(F.col("key").isNotNull())
         .dropDuplicates(["key"])
     )
-    s = storage_keys.select("key")
-    orphan_s = s.join(current, "key", "left_anti")
-    orphan_t = added.join(s, "key", "left_anti")
-    return _audit(s, added, orphan_s, orphan_t, sample)
+    return _audit(storage_keys.select("key"), added, sample, match=current)

@@ -1738,11 +1738,29 @@ def _ivfpq_grouped_sums(
                 [pa.array(ks), lst, pa.array(ns)], ["k", "s", "n"]
             )
 
+    merged, queries = _ivfpq_merge_partials(
+        codes.mapInArrow(partial, "k bigint, s array<bigint>, n bigint").collect(),
+        query_ids_below,
+    )
+    if query_ids_below is not None:
+        return merged, queries
+    return merged
+
+
+def _ivfpq_merge_partials(rows, query_ids_below: int | None):
+    """Driver-side finish of `_ivfpq_grouped_sums`: sum the per-partition
+    ``(k, s, n)`` partials per key into ``{k: [Σs, Σn]}``.  A negative key
+    is a query pseudo-row ``−(vec_id+1)`` only when ``query_ids_below`` is
+    set; otherwise it can only be a key ``group_fn`` should never emit, and
+    it raises instead of vanishing from the merge.  Returns ``(merged,
+    {vec_id: code_row})``."""
     merged: dict = {}
     queries: dict = {}
-    for r in codes.mapInArrow(partial, "k bigint, s array<bigint>, n bigint").collect():
+    for r in rows:
         k = int(r["k"])
         if k < 0:
+            if query_ids_below is None:
+                raise ValueError(f"_ivfpq_grouped_sums: negative group key {k}")
             queries[-k - 1] = np.array(list(r["s"]), dtype=np.int64)
             continue
         s = np.array(list(r["s"]), dtype=np.int64)
@@ -1752,9 +1770,7 @@ def _ivfpq_grouped_sums(
         else:
             got[0] += s
             got[1] += int(r["n"])
-    if query_ids_below is not None:
-        return merged, queries
-    return merged
+    return merged, queries
 
 
 def _ivfpq_codebook_from(merged: dict, scale: int):

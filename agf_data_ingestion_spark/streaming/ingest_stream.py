@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,16 +60,30 @@ def _quarantine_path(warehouse: str) -> str:
 
 
 def _write_quarantine(bad: DataFrame, warehouse: str, source: str) -> None:
+    """Append ``bad`` to the quarantine directory.
+
+    Each write commits into its own hidden ``_staging/<uuid>`` directory and
+    then moves its part files (and their checksums) up into ``quarantine/``.
+    Appending straight into ``quarantine/`` made the run and experiment
+    queries share ``quarantine/_temporary``, where one job's commit deletes
+    the other's in-flight attempt files.  Part file names carry the write
+    job's UUID, so the moves never collide."""
     if bad.isEmpty():
         return
-    (
+    qdir = _quarantine_path(warehouse)
+    staging = os.path.join(qdir, "_staging", uuid.uuid4().hex)
+    try:
         bad.select(
             F.lit(source).alias("source"),
             F.col("s3_key"),
             F.to_json(F.struct(*[c for c in bad.columns])).alias("record"),
             F.current_timestamp().alias("quarantined_at"),
-        ).write.mode("append").parquet(_quarantine_path(warehouse))
-    )
+        ).write.parquet(staging)
+        for f in os.listdir(staging):
+            if f.startswith(("part-", ".part-")):
+                os.replace(os.path.join(staging, f), os.path.join(qdir, f))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def keep_greatest_per_key(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -93,6 +93,26 @@ def test_stage_by_stage_bit_identical(spark, release, tmp_path):
     assert release["weights"] == {r["source"]: r["weight_ppm"] for r in weights.collect()}
 
 
+def test_stage_walls_add_up_to_the_run(release):
+    """Each stage's wall runs from the end of the previous stage, so the
+    work of building a stage frame (the neardup stage's connected
+    components run before its checkpoint) is counted: the stage walls sum
+    to the run's wall_s, less only the report tail."""
+    walls = sum(s["wall_s"] for s in release["stages"])
+    rounding = 0.001 * len(release["stages"])  # each wall is rounded to 1 ms
+    assert release["wall_s"] - 0.25 <= walls <= release["wall_s"] + rounding
+
+
+def test_curate_full_releases_its_caches(spark, release, tmp_path):
+    """The quality-cut caches are unpersisted once their consumers ran:
+    a further release in the same session leaves the CacheManager no
+    larger (a long-lived session does not grow by a release per call)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    curate_full(spark, SF_SMOKE, str(tmp_path / "again"), budget_tokens=2000, seed="0")
+    assert cm.numCachedEntries() <= before
+
+
 def test_txn_alignment_survives_later_commits(spark, release):
     """All ten tables resolve to the SAME txn, and a later unrelated
     single-table commit does not break (or silently retarget) the

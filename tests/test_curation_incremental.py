@@ -8,6 +8,9 @@ atomicity, and time travel back to the base release.
 
 from __future__ import annotations
 
+import hashlib
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +26,98 @@ from agf_data_ingestion_spark.operators.curation import (
     stage_rule_gate,
 )
 from tests.conftest import SF_SMOKE
+
+
+def _py_shingles(text):
+    """``plans/text._shingles`` in Python: distinct space-split 3-word
+    shingles."""
+    w = text.split(" ")
+    return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+
+def _py_perm_hashes(shingle):
+    """The permuted md5 hashes ``plans/text._sigs_of`` takes minima of."""
+    from agf_data_ingestion_spark.plans.text import _MOD, _N_PERMS
+
+    h = hashlib.md5(shingle.encode()).hexdigest()
+    h1, h2 = int(h[:10], 16), int(h[10:20], 16)
+    return [(h1 + p * h2) % _MOD for p in range(_N_PERMS)]
+
+
+def _py_bands(text):
+    """``plans/text._lsh_bands`` in Python: {(band, bsig)}."""
+    from agf_data_ingestion_spark.plans.text import _BAND_ROWS, _N_PERMS
+
+    hs = [_py_perm_hashes(sh) for sh in _py_shingles(text)]
+    sig = [min(h[p] for h in hs) for p in range(_N_PERMS)]
+    return {
+        (b // _BAND_ROWS, "|".join(map(str, sig[b : b + _BAND_ROWS])))
+        for b in range(0, _N_PERMS, _BAND_ROWS)
+    }
+
+
+def _jaccard(a, b):
+    sa, sb = _py_shingles(a), _py_shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def _reused_id_plant(spark, published, batch_texts, thresholds, skip):
+    """Find published docs P, Q and a text N such that N shares an LSH band
+    with P's published text at a Jaccard under the near-dup floor, reaches
+    the floor against Q's text, shares no band with any other published or
+    batch text, and passes the rule gate and the frozen quality cut.
+
+    A batch row that reuses P's id with Q's text is dropped at exact dedup.
+    Scored against P's PUBLISHED set, N is no near-dup and appends; scored
+    against that dropped batch row, it would be flagged."""
+    from agf_data_ingestion_spark.operators.curation import (
+        quality_model_weights,
+        score_quality,
+    )
+    from agf_data_ingestion_spark.plans.text import (
+        _BAND_ROWS,
+        _INC_JACCARD_MIN,
+        _N_PERMS,
+        quality_gate_frame,
+    )
+
+    pub = [r for _, r in sorted(published.items()) if r["doc_id"] not in skip]
+    taken = {r["doc_id"]: _py_bands(r["text"]) for r in published.values()}
+    taken_batch = set().union(*map(_py_bands, batch_texts))
+    found = []
+    for P, Q in itertools.permutations(pub, 2):
+        if P["lang"] != Q["lang"]:
+            continue
+        wp, wq = P["text"].split(" "), Q["text"].split(" ")
+        hs = [_py_perm_hashes(" ".join(wp[i : i + 3])) for i in range(len(wp) - 2)]
+        for b in range(0, _N_PERMS, _BAND_ROWS):
+            # the shingles holding P's minima in band b
+            pos = {
+                min(range(len(hs)), key=lambda i: hs[i][p]) for p in range(b, b + _BAND_ROWS)
+            }
+            core = [w for i in sorted(pos) for w in wp[i : i + 3]]
+            for frac, off in itertools.product((0.45, 0.55, 0.65), (0, 5, 10)):
+                n = " ".join(wq[off : off + int(len(wq) * frac)] + core)
+                nb = _py_bands(n)
+                if (
+                    nb & taken[P["doc_id"]]
+                    and _jaccard(n, P["text"]) < _INC_JACCARD_MIN <= _jaccard(n, Q["text"])
+                    and not nb & taken_batch
+                    and not any(nb & v for k, v in taken.items() if k != P["doc_id"])
+                ):
+                    found.append((P, Q, n))
+    cand = spark.createDataFrame(
+        [(i, n) for i, (_, _, n) in enumerate(found)], "doc_id long, text string"
+    )
+    scores = score_quality(quality_model_weights(spark, SF_SMOKE), cand)
+    ok = {
+        r["doc_id"]: r["_score"]
+        for r in quality_gate_frame(cand).filter(F.col("keep")).join(scores, "doc_id").collect()
+    }
+    for i, (P, Q, n) in enumerate(found):
+        if i in ok and ok[i] >= thresholds[P["lang"]]:
+            return P, Q, n
+    raise AssertionError("no reused-id near-dup plant in this fixture")
 
 
 @pytest.fixture(scope="module")
@@ -146,6 +241,21 @@ def setup(spark, tmp_path_factory):
     rows.append(
         (bench_id, btext, bench_rows[1]["lang"], bench_rows[1]["source"], len(btext))
     )
+    # planted (dup-side union): a batch doc reusing published id P with
+    # the text of published doc Q (so exact dedup drops it), and a fresh
+    # doc whose only LSH collision is P's published text, below the
+    # near-dup floor — it must append, not be scored against the dropped
+    # batch row
+    P, Q, reuse_text = _reused_id_plant(
+        spark,
+        published,
+        [r[1] for r in rows],
+        rel["quality_thresholds"],
+        skip={some_pub["doc_id"]},
+    )
+    rows.append((P["doc_id"], Q["text"], Q["lang"], Q["source"], len(Q["text"])))
+    reuse_near_id = base + 105
+    rows.append((reuse_near_id, reuse_text, P["lang"], P["source"], len(reuse_text)))
     batch = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
@@ -164,6 +274,7 @@ def setup(spark, tmp_path_factory):
             "gate_fail": gate_fail_id,
             "contaminated": contaminated_id,
             "bench_id": bench_id,
+            "reuse_near": reuse_near_id,
         },
     }
 
@@ -188,11 +299,18 @@ def test_planted_cases(spark, setup):
     assert pl["near_dup"] not in appended  # dropped vs published bands
     assert pl["internal_dup"] not in appended  # within-batch keep-first
     assert pl["gate_fail"] not in appended  # rule gate
-    # every appended doc is one of the crafted good docs, and the first
-    # good doc (the internal dup's keeper) survived
-    assert appended <= set(setup["good_ids"])
+    # every appended doc is one of the crafted good docs or the reused-id
+    # plant, and the first good doc (the internal dup's keeper) survived
+    assert appended <= set(setup["good_ids"]) | {pl["reuse_near"]}
     assert setup["good_ids"][0] in appended
     assert len(appended) >= len(setup["good_ids"]) // 2
+
+
+def test_neardup_scores_against_published_set_on_reused_id(spark, setup):
+    """ADVICE medium: a batch doc reusing a published id but dropped at
+    exact dedup with different text must not stand in for the published
+    set on the near-dup dup side — the published row wins."""
+    assert setup["planted"]["reuse_near"] in _appended_ids(spark, setup)
 
 
 def test_incremental_decontam(spark, setup):

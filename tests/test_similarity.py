@@ -399,3 +399,28 @@ def test_recall_curve_n_gt_exact(recall_curve):
     from agf_data_ingestion_spark.plans.similarity import _N_QUERIES, _TOPK
 
     assert all(n == _N_QUERIES * _TOPK for _h, n in recall_curve.values())
+
+
+def test_ivfpq_merge_negative_keys_only_as_query_rows():
+    """The driver merge of `_ivfpq_grouped_sums` sums partials per key and
+    reads a negative key as a query pseudo-row −(vec_id+1) only when the
+    scan was asked to carry query rows; otherwise a negative key raises
+    instead of being dropped from the merge."""
+    from agf_data_ingestion_spark.plans.similarity import _ivfpq_merge_partials
+
+    rows = [
+        {"k": 3, "s": [1, 2], "n": 1},
+        {"k": 3, "s": [10, 20], "n": 2},
+        {"k": 0, "s": [5, 5], "n": 4},
+        {"k": -8, "s": [7, 9], "n": -1},
+    ]
+    merged, queries = _ivfpq_merge_partials(rows, query_ids_below=10)
+    assert {k: (v[0].tolist(), v[1]) for k, v in merged.items()} == {
+        3: ([11, 22], 3),
+        0: ([5, 5], 4),
+    }
+    assert {k: v.tolist() for k, v in queries.items()} == {7: [7, 9]}
+    with pytest.raises(ValueError, match="negative group key -8"):
+        _ivfpq_merge_partials(rows, query_ids_below=None)
+    merged, queries = _ivfpq_merge_partials(rows[:3], query_ids_below=None)
+    assert sorted(merged) == [0, 3] and queries == {}

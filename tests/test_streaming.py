@@ -153,6 +153,35 @@ def test_full_backfill_both_types_and_quarantine(spark, lake, tmp_path):
     }
 
 
+
+def test_quarantine_write_spares_concurrent_attempt_files(spark, tmp_path):
+    """The run and experiment queries quarantine into one directory.  A
+    write must not delete another job's in-flight attempt files under
+    ``quarantine/_temporary`` (a shared append committed and cleaned that
+    directory up), and its rows still land in top-level part files."""
+    import pyarrow.parquet as pq
+
+    from agf_data_ingestion_spark.streaming.ingest_stream import _write_quarantine
+
+    wh = str(tmp_path / "wh")
+    q = os.path.join(wh, "quarantine")
+    attempt = os.path.join(
+        q, "_temporary", "0", "_temporary", "attempt_202403010000_0007_m_000000_0"
+    )
+    os.makedirs(attempt)
+    inflight = os.path.join(attempt, "part-00000-inflight.snappy.parquet")
+    with open(inflight, "wb") as fh:
+        fh.write(b"in flight")
+    bad = spark.createDataFrame(
+        [("raw/a/run.json", 1), ("raw/b/run.json", 2)], "s3_key string, n int"
+    )
+    _write_quarantine(bad, wh, "run.json")
+    _write_quarantine(bad.limit(1), wh, "experiment.json")
+    assert os.path.exists(inflight)
+    parts = [f for f in os.listdir(q) if f.endswith(".parquet")]
+    assert sum(pq.ParquetFile(os.path.join(q, f)).metadata.num_rows for f in parts) == 3
+    assert spark.read.parquet(q).count() == 3
+
 def test_snapshot_replace_sink_updates_changed_resync(spark, tmp_path):
     """put_item parity (reference agf_ingestion_lambda.py:227): a re-sync
     whose manifest CONTENT changed must UPDATE the tracked row under the
