@@ -44,13 +44,17 @@ Scale shape per stage (the 100 TB story):
   lineage/datacard/stats are metadata-sized, postings are the usual
   token-clustered index build.
 
-Each stage boundary is an eager ``localCheckpoint``: per-stage wall
-times are honest (no lazy cost smearing into later stages) and no
-stage's plan is recomputed by downstream actions.
+Each stage boundary is ONE Spark job (``_materialize``): an eager
+``localCheckpoint`` whose row count rides the same job as an
+``Observation``, so no stage's plan is recomputed by downstream actions
+and the funnel count costs no job of its own.  Each stage's wall runs
+from the end of the previous stage (``_Clock``), so the walls add up to
+the run.  The ten-table release layout is declared once (``_RELEASE``).
 """
 
 from __future__ import annotations
 
+import os
 import time
 from fractions import Fraction
 
@@ -66,6 +70,123 @@ _CUT_TILES = 20
 
 #: canonical documents-table column set carried through every stage
 _DOC_COLS = ("doc_id", "text", "lang", "source", "n_chars")
+
+#: the release layout: each of the ten tables' path under the release
+#: root, its cluster-by keys and its bloom columns.  The cluster+bloom'd
+#: stores are the ones a later batch probes with PRUNED reads
+#: (O(batch + collisions), never a corpus scan).  Every reader and writer
+#: of a release resolves its paths through ``_release_tables``.
+_RELEASE: dict[str, tuple[tuple[str, ...], list[str] | None, list[str] | None]] = {
+    "shards": (("shards",), ["shard_id", "global_pos"], None),
+    "lineage": (("lineage",), ["doc_id"], ["doc_id"]),
+    "datacard": (("datacard",), None, None),
+    "postings": (("index", "postings"), ["token"], ["token"]),
+    "stats": (("index", "stats"), None, None),
+    "hashes": (("stores", "hashes"), ["h"], ["h"]),
+    "bands": (("stores", "bands"), ["bsig"], ["bsig"]),
+    "sets": (("stores", "sets"), None, None),
+    "bench": (("stores", "bench"), ["sh"], ["sh"]),
+    "policy": (("policy",), None, None),
+}
+
+
+def _release_tables(out_root: str) -> dict[str, str]:
+    """{table key: path} of the release rooted at ``out_root``."""
+    return {k: os.path.join(out_root, *p) for k, (p, _, _) in _RELEASE.items()}
+
+
+def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """A stage boundary as ONE Spark job: ``(checkpointed_df, rows)``.
+    The row count rides the eager ``localCheckpoint`` as an
+    ``Observation`` (the components.py convergence-check pattern); a
+    ``.count()`` after the checkpoint would cost two more jobs.  A
+    STATICALLY-empty plan is returned as is with 0 rows: the optimizer
+    prunes an Observation on it and ``obs.get`` would die with a bare
+    Py4J assertion (the CLAUDE.md r4 caveat)."""
+    from pyspark.sql import Observation
+
+    from agf_data_ingestion_spark.sources.snapshots import _statically_empty
+
+    if _statically_empty(df):
+        return df, 0
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, int(obs.get["n"])
+
+
+class _Clock:
+    """The stage recorder: each ``lap`` records ``{"name", "rows_out",
+    "wall_s"}`` with the wall running from the end of the previous lap
+    (or the clock's start).  The work of BUILDING a stage frame therefore
+    counts too (docs_dup_clusters runs its connected-components jobs
+    before the neardup checkpoint starts), and the laps add up to the
+    span the clock covers."""
+
+    def __init__(self) -> None:
+        self.laps: list[dict] = []
+        self._t = time.time()
+
+    def lap(self, name: str, rows_out: int | None = None) -> None:
+        now = time.time()
+        self.laps.append(
+            {"name": name, "rows_out": rows_out, "wall_s": round(now - self._t, 3)}
+        )
+        self._t = now
+
+    def checkpoint(self, name: str, df: DataFrame) -> DataFrame:
+        """A document-stage boundary: materialize the canonical columns
+        and record the stage with its surviving row count."""
+        out, rows = _materialize(df.select(*_DOC_COLS))
+        self.lap(name, rows)
+        return out
+
+
+def _publish_release(
+    assigned: DataFrame,
+    extra: dict[str, DataFrame],
+    tbls: dict[str, str],
+    *,
+    mode: str,
+    op: str,
+    cluster_files: dict[str, int] | None = None,
+) -> dict[str, int]:
+    """Publish a release's ten tables as ONE ``snapshot_multi_write``
+    transaction — a trainer either sees the whole release or none of it.
+    The shards table is ``assigned`` itself; lineage, index postings and
+    stats, and the hashes/bands/sets probe stores are all derived from it
+    HERE, so the stores an append probes cannot drift in shape from the
+    stores the release wrote.  ``extra`` supplies the datacard, bench and
+    policy frames; ``cluster_files`` maps a table key to a file-count
+    target.  Returns {table path: committed version}."""
+    from agf_data_ingestion_spark.operators.text_index import _batch_stats, _encode
+    from agf_data_ingestion_spark.plans.text import _lsh_bands, _shingles, _sigs_of
+    from agf_data_ingestion_spark.sources.snapshots import snapshot_multi_write
+
+    postings = _encode(assigned.select("doc_id", "text"), "text", "doc_id")
+    frames = {
+        "shards": assigned,
+        "lineage": assigned.select("doc_id", "shard_id", "n_tokens"),
+        "postings": postings,
+        "stats": _batch_stats(postings),
+        # incremental-probe stores (r9): the published corpus's exact-dup
+        # hashes, MinHash band keys and shingle sets, published in the
+        # SAME txn so a batch can never probe stores from a different
+        # release than the shards it extends (see curate_incremental)
+        "hashes": assigned.select("doc_id", F.md5(F.lower(F.col("text"))).alias("h")),
+        "bands": _lsh_bands(_sigs_of(assigned.select("doc_id", "text"))),
+        "sets": assigned.select("doc_id", _shingles().alias("sset")).withColumn(
+            "sz", F.size("sset")
+        ),
+        **extra,
+    }
+    return snapshot_multi_write(
+        [(frames[k], tbls[k]) for k in _RELEASE],
+        mode=mode,
+        op=op,
+        cluster_by={tbls[k]: c for k, (_, c, _) in _RELEASE.items() if c},
+        bloom_cols={tbls[k]: b for k, (_, _, b) in _RELEASE.items() if b},
+        cluster_files={tbls[k]: n for k, n in (cluster_files or {}).items()},
+    )
 
 
 def stage_rule_gate(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
@@ -316,50 +437,25 @@ def curate_full(
       "txn": {"id": ..., "versions": {table: v}}, "tables": {...},
       "wall_s": total}``
     """
-    import os
-
     from agf_data_ingestion_spark.operators.shards import (
         assign_shards,
         weighted_interleave,
     )
-    from agf_data_ingestion_spark.operators.text_index import (
-        _batch_stats,
-        _encode,
-    )
     from agf_data_ingestion_spark.plans.mixing import domain_reweight_frame
     from agf_data_ingestion_spark.plans.training_data import datacard_frame
     from agf_data_ingestion_spark.sources.snapshots import (
-        snapshot_multi_write,
         snapshot_read_txn,
         snapshot_txn_id,
     )
 
     t_run = time.time()
-    stages: list[dict] = []
-    # each stage's wall runs from the end of the previous stage (the _seg
-    # pattern of curate_incremental), so the work of BUILDING a stage frame
-    # counts too — docs_dup_clusters runs its connected-components jobs
-    # before the neardup checkpoint starts — and the stage walls add up to
-    # the run's wall_s, less the report tail
-    _lap_t = [t_run]
+    clock = _Clock()
 
-    def _stage_done(name: str, rows_out: int) -> None:
-        now = time.time()
-        stages.append(
-            {"name": name, "rows_out": rows_out, "wall_s": round(now - _lap_t[0], 3)}
-        )
-        _lap_t[0] = now
-
-    def _checkpointed(name: str, df: DataFrame) -> DataFrame:
-        out = df.select(*_DOC_COLS).localCheckpoint(eager=True)
-        _stage_done(name, out.count())
-        return out
-
-    docs = _checkpointed("input", t(spark, sf_dir, "documents"))
-    docs = _checkpointed("rule_gate", stage_rule_gate(spark, sf_dir, docs))
-    docs = _checkpointed("exact_dedup", stage_exact_dedup(docs))
-    docs = _checkpointed("neardup", stage_neardup(spark, sf_dir, docs))
-    docs = _checkpointed("decontam", stage_decontam(spark, sf_dir, docs))
+    docs = clock.checkpoint("input", t(spark, sf_dir, "documents"))
+    docs = clock.checkpoint("rule_gate", stage_rule_gate(spark, sf_dir, docs))
+    docs = clock.checkpoint("exact_dedup", stage_exact_dedup(docs))
+    docs = clock.checkpoint("neardup", stage_neardup(spark, sf_dir, docs))
+    docs = clock.checkpoint("decontam", stage_decontam(spark, sf_dir, docs))
 
     cut = pick_cut_tile(spark, sf_dir)
     # r13 (the r12 guard-folding rule applied to the quality-cut window):
@@ -367,7 +463,7 @@ def curate_full(
     # max-docs-per-language — when it already clears the route threshold
     # the guard job proves nothing the count didn't (both branches are
     # bit-identical; the guard only picks the plan)
-    n_dec = stages[-1]["rows_out"]
+    n_dec = clock.laps[-1]["rows_out"]
     qcut_caches: list[DataFrame] = []
     cut_docs, thresholds = stage_quality_cut(
         spark, sf_dir, docs, cut,
@@ -375,21 +471,21 @@ def curate_full(
         caches=qcut_caches,
     )
     thresh_rows = {r["lang"]: int(r["value"]) for r in thresholds.collect()}
-    docs = _checkpointed("quality_cut", cut_docs)
+    docs = clock.checkpoint("quality_cut", cut_docs)
     # both consumers of the quality-cut caches (the thresholds collect and
     # the survivors checkpoint) have run: release them so a long-lived
     # session's CacheManager does not grow by a release's worth per call
     # (the curate_incremental rule)
     for _c in qcut_caches:
         _c.unpersist()
-    n_cut = stages[-1]["rows_out"]
+    n_cut = clock.laps[-1]["rows_out"]
 
     weights = domain_reweight_frame(docs).select("source", "weight_ppm")
     wrows = {r["source"]: int(r["weight_ppm"]) for r in weights.collect()}
     weights = spark.createDataFrame(
         sorted(wrows.items()), "source string, weight_ppm long"
     )
-    _stage_done("doremi_weights", len(wrows))
+    clock.lap("doremi_weights", len(wrows))
 
     # r12 (VERDICT r11 ask #7, the curriculum guard-folding rule): the
     # interleave's skew-route guard is max-docs-per-source, and the
@@ -400,49 +496,30 @@ def curate_full(
     # job and fall back to the honest aggregate only above the bound.
     from agf_data_ingestion_spark.operators.shards import _WI_SRC_ROUTE
 
-    assigned = assign_shards(
-        weighted_interleave(
-            docs,
-            weights,
+    assigned, n_final = _materialize(
+        assign_shards(
+            weighted_interleave(
+                docs,
+                weights,
+                seed=seed,
+                source_route=(n_cut if n_cut <= _WI_SRC_ROUTE else None),
+            ),
+            budget_tokens=budget_tokens,
             seed=seed,
-            source_route=(n_cut if n_cut <= _WI_SRC_ROUTE else None),
-        ),
-        budget_tokens=budget_tokens,
-        seed=seed,
-        order_key="_wfq",
-    ).drop("_wfq", "_t", "weight_ppm")
-    assigned = assigned.localCheckpoint(eager=True)
-    n_final = assigned.count()
-    _stage_done("wfq_shards", n_final)
+            order_key="_wfq",
+        ).drop("_wfq", "_t", "weight_ppm")
+    )
+    clock.lap("wfq_shards", n_final)
 
     # release datacard: the standard sections over the FINAL corpus plus
     # the funnel itself (one row per stage) — the provenance a release
     # ships with
     funnel = spark.createDataFrame(
-        [("funnel", s["name"], s["rows_out"]) for s in stages],
+        [("funnel", s["name"], s["rows_out"]) for s in clock.laps],
         "section string, key string, value long",
     )
     datacard = datacard_frame(assigned.select(*_DOC_COLS)).unionByName(funnel)
 
-    lineage = assigned.select("doc_id", "shard_id", "n_tokens")
-    postings = _encode(assigned.select("doc_id", "text"), "text", "doc_id")
-    stats = _batch_stats(postings)
-
-    # incremental-probe stores (r9): the published corpus's exact-dup
-    # hashes, MinHash band keys, and shingle sets — cluster+bloom'd so a
-    # later batch probes them with PRUNED reads (O(batch + collisions),
-    # never a corpus scan); published in the SAME txn so a batch can
-    # never probe stores from a different release than the shards it
-    # extends (see curate_incremental)
-    from agf_data_ingestion_spark.plans.text import _lsh_bands, _shingles, _sigs_of
-
-    hashes = assigned.select(
-        "doc_id", F.md5(F.lower(F.col("text"))).alias("h")
-    )
-    bands = _lsh_bands(_sigs_of(assigned.select("doc_id", "text")))
-    sets_ = assigned.select("doc_id", _shingles().alias("sset")).withColumn(
-        "sz", F.size("sset")
-    )
     # benchmark shingle store (r10, ADVICE r9): the held-out set the
     # release was decontaminated against, published IN the txn so an
     # incremental batch gates under the SAME frozen benchmark — without
@@ -478,70 +555,24 @@ def curate_full(
         )
     )
 
-    shards_tbl = os.path.join(out_root, "shards")
-    lineage_tbl = os.path.join(out_root, "lineage")
-    datacard_tbl = os.path.join(out_root, "datacard")
-    postings_tbl = os.path.join(out_root, "index", "postings")
-    stats_tbl = os.path.join(out_root, "index", "stats")
-    hashes_tbl = os.path.join(out_root, "stores", "hashes")
-    bands_tbl = os.path.join(out_root, "stores", "bands")
-    sets_tbl = os.path.join(out_root, "stores", "sets")
-    bench_tbl = os.path.join(out_root, "stores", "bench")
-    policy_tbl = os.path.join(out_root, "policy")
-
-    versions = snapshot_multi_write(
-        [
-            (assigned, shards_tbl),
-            (lineage, lineage_tbl),
-            (datacard, datacard_tbl),
-            (postings, postings_tbl),
-            (stats, stats_tbl),
-            (hashes, hashes_tbl),
-            (bands, bands_tbl),
-            (sets_, sets_tbl),
-            (bench_sh, bench_tbl),
-            (policy, policy_tbl),
-        ],
+    tbls = _release_tables(out_root)
+    versions = _publish_release(
+        assigned,
+        {"datacard": datacard, "bench": bench_sh, "policy": policy},
+        tbls,
         mode="overwrite",
         op=f"curate_full:{seed}:{budget_tokens}",
-        cluster_by={
-            shards_tbl: ["shard_id", "global_pos"],
-            lineage_tbl: ["doc_id"],
-            postings_tbl: ["token"],
-            hashes_tbl: ["h"],
-            bands_tbl: ["bsig"],
-            bench_tbl: ["sh"],
-        },
-        bloom_cols={
-            lineage_tbl: ["doc_id"],
-            postings_tbl: ["token"],
-            hashes_tbl: ["h"],
-            bands_tbl: ["bsig"],
-            bench_tbl: ["sh"],
-        },
         cluster_files=(
-            {postings_tbl: index_cluster_files} if index_cluster_files else None
+            {"postings": index_cluster_files} if index_cluster_files else None
         ),
     )
-    _stage_done("publish", n_final)
+    clock.lap("publish", n_final)
 
     # txn-aligned read-back: all ten tables resolve to the SAME publish
     # event, and the shards table round-trips the exact row count — the
     # "did the release land whole" check a consumer would run
-    all_tbls = [
-        shards_tbl,
-        lineage_tbl,
-        datacard_tbl,
-        postings_tbl,
-        stats_tbl,
-        hashes_tbl,
-        bands_tbl,
-        sets_tbl,
-        bench_tbl,
-        policy_tbl,
-    ]
-    aligned = snapshot_read_txn(spark, all_tbls)
-    n_read = aligned[shards_tbl].count()
+    aligned = snapshot_read_txn(spark, list(tbls.values()))
+    n_read = aligned[tbls["shards"]].count()
     if n_read != n_final:
         raise AssertionError(
             f"curate_full: published shards read back {n_read} rows, expected {n_final}"
@@ -549,10 +580,10 @@ def curate_full(
     tok_row = assigned.agg(
         F.max("shard_id").alias("m"), F.sum("n_tokens").alias("t")
     ).collect()[0]
-    _stage_done("txn_read_verify", n_read)
+    clock.lap("txn_read_verify", n_read)
 
     return {
-        "stages": stages,
+        "stages": clock.laps,
         "cut_tile": cut,
         "weights": wrows,
         "quality_thresholds": thresh_rows,
@@ -561,21 +592,10 @@ def curate_full(
         "budget_tokens": budget_tokens,
         "seed": seed,
         "txn": {
-            "id": snapshot_txn_id(shards_tbl, versions[shards_tbl]),
+            "id": snapshot_txn_id(tbls["shards"], versions[tbls["shards"]]),
             "versions": versions,
         },
-        "tables": {
-            "shards": shards_tbl,
-            "lineage": lineage_tbl,
-            "datacard": datacard_tbl,
-            "postings": postings_tbl,
-            "stats": stats_tbl,
-            "hashes": hashes_tbl,
-            "bands": bands_tbl,
-            "sets": sets_tbl,
-            "bench": bench_tbl,
-            "policy": policy_tbl,
-        },
+        "tables": tbls,
         "wall_s": round(time.time() - t_run, 3),
     }
 
@@ -811,15 +831,9 @@ def curate_incremental(
     document's text on the basis of erased data, which is exactly what
     erasure must prevent (pinned in tests/test_release_forget.py).
     """
-    import os
-
     from agf_data_ingestion_spark.operators.shards import (
         assign_shards,
         weighted_interleave,
-    )
-    from agf_data_ingestion_spark.operators.text_index import (
-        _batch_stats,
-        _encode,
     )
     from agf_data_ingestion_spark.plans.text import (
         _lsh_bands,
@@ -829,7 +843,6 @@ def curate_incremental(
         quality_gate_frame,
     )
     from agf_data_ingestion_spark.sources.snapshots import (
-        snapshot_multi_write,
         snapshot_read,
         snapshot_read_txn,
         snapshot_txn_id,
@@ -837,42 +850,13 @@ def curate_incremental(
     )
 
     t_run = time.time()
-    tbls = {
-        "shards": os.path.join(out_root, "shards"),
-        "lineage": os.path.join(out_root, "lineage"),
-        "datacard": os.path.join(out_root, "datacard"),
-        "postings": os.path.join(out_root, "index", "postings"),
-        "stats": os.path.join(out_root, "index", "stats"),
-        "hashes": os.path.join(out_root, "stores", "hashes"),
-        "bands": os.path.join(out_root, "stores", "bands"),
-        "sets": os.path.join(out_root, "stores", "sets"),
-        "bench": os.path.join(out_root, "stores", "bench"),
-        "policy": os.path.join(out_root, "policy"),
-    }
-    versions, base_txn = snapshot_txn_versions(list(tbls.values()), txn_id)
-    stages: list[dict] = []
-
-    def _stage(name: str, df: DataFrame) -> DataFrame:
-        t0 = time.time()
-        out = df.select(*_DOC_COLS).localCheckpoint(eager=True)
-        stages.append(
-            {"name": name, "rows_out": out.count(), "wall_s": round(time.time() - t0, 3)}
-        )
-        return out
-
     # per-trigger segment walls (r11 — the curate_stream latency rung):
-    # coarse wall-clock between the stage checkpoints, catching the cost
-    # the _stage timers DON'T see (probe-store limit-collects, the
-    # txn-version resolve, the WFQ interleave/assign checkpoints, the
-    # ten-table publish).  Additive report key; the datacard funnel rows
-    # are unchanged.
-    segments: dict[str, float] = {}
-    _seg_t = [time.time()]
-
-    def _seg(name: str) -> None:
-        now = time.time()
-        segments[name] = round(now - _seg_t[0], 3)
-        _seg_t[0] = now
+    # coarse laps that also catch the cost between the document stages
+    # (the txn-version resolve and policy read, the verify and report
+    # tail).  Additive report key; the datacard funnel rows are unchanged.
+    segs = _Clock()
+    tbls = _release_tables(out_root)
+    versions, base_txn = snapshot_txn_versions(list(tbls.values()), txn_id)
 
     # ---- frozen policy ----
     pol = snapshot_read(
@@ -894,13 +878,16 @@ def curate_incremental(
     )
     if not thresholds or not weights:
         raise ValueError("curate_incremental: release policy table is incomplete")
-    _seg("resolve_and_policy")
+    segs.lap("resolve_and_policy")
 
-    docs = _stage("batch_input", batch)
+    # the stage walls start here, so they add up to the run less the
+    # resolve_and_policy and verify_and_report segments
+    clock = _Clock()
+    docs = clock.checkpoint("batch_input", batch)
 
     # ---- rule gate (same rules as the release) ----
     keep = quality_gate_frame(docs).filter(F.col("keep")).select("doc_id")
-    docs = _stage("rule_gate", docs.join(keep, "doc_id", "left_semi"))
+    docs = clock.checkpoint("rule_gate", docs.join(keep, "doc_id", "left_semi"))
 
     # ---- r13 probe fusion (VERDICT r12 ask #5) ------------------------
     # The hash / band / benchmark-shingle probe KEYS are all derivable
@@ -943,7 +930,7 @@ def curate_incremental(
 
     # ---- exact dedup: batch-internal + vs the published hash store ----
     published_h = published_h.select(F.col("h").alias("_h"))
-    docs = _stage(
+    docs = clock.checkpoint(
         "exact_dedup",
         docs_bd.join(
             F.broadcast(published_h)
@@ -998,7 +985,7 @@ def curate_incremental(
     flagged = best_jaccard_matches(cands, sets_all, dup_sets).select(
         F.col("new_id").alias("doc_id")
     )
-    docs = _stage("neardup", docs.join(flagged, "doc_id", "left_anti"))
+    docs = clock.checkpoint("neardup", docs.join(flagged, "doc_id", "left_anti"))
 
     # ---- decontamination vs the PUBLISHED benchmark shingle store ----
     # (r10, ADVICE r9): the same frozen benchmark curate_full scrubbed
@@ -1016,7 +1003,7 @@ def curate_incremental(
         .select("doc_id")
         .distinct()
     )
-    docs = _stage(
+    docs = clock.checkpoint(
         "decontam",
         docs.filter(F.col("doc_id") >= _BENCH_DOCS).join(
             contaminated, "doc_id", "left_anti"
@@ -1036,8 +1023,8 @@ def curate_incremental(
         .filter(F.col("_score") >= F.coalesce(F.col("thr"), F.lit(fallback)))
         .select("doc_id")
     )
-    docs = _stage("quality_cut", docs.join(passing, "doc_id", "left_semi"))
-    _seg("gates_and_probes")
+    docs = clock.checkpoint("quality_cut", docs.join(passing, "doc_id", "left_semi"))
+    segs.lap("gates_and_probes")
 
     # ---- shard continuation from manifest stats (O(metadata)) ----
     from agf_data_ingestion_spark.sources.snapshots import current_version
@@ -1062,8 +1049,8 @@ def curate_incremental(
     # the curate_full twin)
     from agf_data_ingestion_spark.operators.shards import _WI_SRC_ROUTE
 
-    n_gated = stages[-1]["rows_out"]
-    assigned = (
+    n_gated = clock.laps[-1]["rows_out"]
+    assigned, n_final = _materialize(
         assign_shards(
             # horizon=False: an append extends a release — the one-epoch
             # exhaustion cut would starve a small batch (see shards.py)
@@ -1081,18 +1068,13 @@ def curate_incremental(
         .drop("_wfq", "_t", "weight_ppm")
         .withColumn("shard_id", F.col("shard_id") + F.lit(base_shard))
         .withColumn("global_pos", F.col("global_pos") + F.lit(base_pos))
-        .localCheckpoint(eager=True)
     )
-    n_final = assigned.count()
-    _seg("wfq_assign")
-    stages.append(
-        {"name": "wfq_shards", "rows_out": n_final, "wall_s": segments["wfq_assign"]}
-    )
+    segs.lap("wfq_assign")
+    clock.lap("wfq_shards", n_final)
 
     # ---- one ten-table append txn ----
-    postings = _encode(assigned.select("doc_id", "text"), "text", "doc_id")
     funnel = spark.createDataFrame(
-        [("funnel_inc:" + batch_label, s["name"], s["rows_out"]) for s in stages],
+        [("funnel_inc:" + batch_label, s["name"], s["rows_out"]) for s in clock.laps],
         "section string, key string, value long",
     )
     # PROVABLY-empty frames (r11, the curate_stream latency rung):
@@ -1106,48 +1088,15 @@ def curate_incremental(
     # empty schema-bearing frame (the policy-table pattern) so all ten
     # tables advance under one txn marker
     empty_bench = empty_frame(spark, "sh string")
-    t0 = time.time()
-    new_versions = snapshot_multi_write(
-        [
-            (assigned, tbls["shards"]),
-            (assigned.select("doc_id", "shard_id", "n_tokens"), tbls["lineage"]),
-            (funnel, tbls["datacard"]),
-            (postings, tbls["postings"]),
-            (_batch_stats(postings), tbls["stats"]),
-            (
-                assigned.select("doc_id", F.md5(F.lower(F.col("text"))).alias("h")),
-                tbls["hashes"],
-            ),
-            (_lsh_bands(_sigs_of(assigned.select("doc_id", "text"))), tbls["bands"]),
-            (
-                assigned.select("doc_id", _shingles().alias("sset")).withColumn(
-                    "sz", F.size("sset")
-                ),
-                tbls["sets"],
-            ),
-            (empty_bench, tbls["bench"]),
-            (empty_policy, tbls["policy"]),
-        ],
+    new_versions = _publish_release(
+        assigned,
+        {"datacard": funnel, "bench": empty_bench, "policy": empty_policy},
+        tbls,
         mode="append",
         op=f"curate_inc:{batch_label}:{seed}:{budget_tokens}",
-        cluster_by={
-            tbls["shards"]: ["shard_id", "global_pos"],
-            tbls["lineage"]: ["doc_id"],
-            tbls["postings"]: ["token"],
-            tbls["hashes"]: ["h"],
-            tbls["bands"]: ["bsig"],
-        },
-        bloom_cols={
-            tbls["lineage"]: ["doc_id"],
-            tbls["postings"]: ["token"],
-            tbls["hashes"]: ["h"],
-            tbls["bands"]: ["bsig"],
-        },
     )
-    stages.append(
-        {"name": "publish", "rows_out": n_final, "wall_s": round(time.time() - t0, 3)}
-    )
-    _seg("publish")
+    clock.lap("publish", n_final)
+    segs.lap("publish")
     # trigger-scoped caches released NOW (r13, VERDICT r12 ask #9): every
     # consumer has executed (all stages checkpointed, publish committed),
     # and each trigger's batch frame canonicalizes differently, so
@@ -1172,13 +1121,13 @@ def curate_incremental(
     tok_row = assigned.agg(
         F.max("shard_id").alias("m"), F.sum("n_tokens").alias("t")
     ).collect()[0]
-    _seg("verify_and_report")
+    segs.lap("verify_and_report")
     return {
-        "stages": stages,
-        "segments": segments,
+        "stages": clock.laps,
+        "segments": {s["name"]: s["wall_s"] for s in segs.laps},
         "base_txn": base_txn,
         "txn": {"id": inc_txn, "versions": new_versions},
-        "tables": dict(tbls),
+        "tables": tbls,
         "first_new_shard": base_shard,
         "n_new_shards": (
             int(tok_row["m"]) - base_shard + 1 if tok_row["m"] is not None else 0
@@ -1262,28 +1211,12 @@ def verify_release(
     "counts": {...}}`` — the default audit is cheap enough to run after
     every publish (metadata + a few doc-count-sized aggregates; the
     corpus text is never re-read unless ``deep``)."""
-    import os
-
     from agf_data_ingestion_spark.sources.snapshots import (
         snapshot_read,
         snapshot_read_txn,
     )
 
-    tbls = {
-        k: os.path.join(out_root, *p)
-        for k, p in {
-            "shards": ("shards",),
-            "lineage": ("lineage",),
-            "datacard": ("datacard",),
-            "postings": ("index", "postings"),
-            "stats": ("index", "stats"),
-            "hashes": ("stores", "hashes"),
-            "bands": ("stores", "bands"),
-            "sets": ("stores", "sets"),
-            "bench": ("stores", "bench"),
-            "policy": ("policy",),
-        }.items()
-    }
+    tbls = _release_tables(out_root)
     if current:
         # one coherent, repair-aware version set (r11 — see
         # _stable_current_versions), then every read pinned to it
@@ -1297,8 +1230,7 @@ def verify_release(
         checks = {"txn_aligned": True}  # read_txn raised otherwise
 
     sh = aligned[tbls["shards"]].select("doc_id", "global_pos", "n_tokens")
-    sh = sh.localCheckpoint(eager=True)  # five consumers below
-    n_docs = sh.count()
+    sh, n_docs = _materialize(sh)  # five consumers below
     tok_total = sh.agg(F.sum("n_tokens")).collect()[0][0] or 0
 
     lin = aligned[tbls["lineage"]].select("doc_id")
@@ -1419,8 +1351,6 @@ def release_forget(
     idempotent re-run of the forget) observes the tear.  Scale
     shape: O(removed docs + eq-key metadata) except the stats recompute,
     one column-pruned postings scan — acceptable for an erasure op."""
-    import os
-
     from agf_data_ingestion_spark.operators.text_index import _batch_stats
     from agf_data_ingestion_spark.sources.snapshots import (
         snapshot_delete_keys,
@@ -1430,16 +1360,7 @@ def release_forget(
 
     if not doc_ids:
         return {"found": 0, "erased": 0}
-    tbls = {
-        "shards": os.path.join(out_root, "shards"),
-        "lineage": os.path.join(out_root, "lineage"),
-        "datacard": os.path.join(out_root, "datacard"),
-        "postings": os.path.join(out_root, "index", "postings"),
-        "stats": os.path.join(out_root, "index", "stats"),
-        "hashes": os.path.join(out_root, "stores", "hashes"),
-        "bands": os.path.join(out_root, "stores", "bands"),
-        "sets": os.path.join(out_root, "stores", "sets"),
-    }
+    tbls = _release_tables(out_root)
     ids = sorted(set(int(i) for i in doc_ids))
     found = [
         r["doc_id"]
@@ -1537,16 +1458,16 @@ def release_diff(
     derives two release compositions in-plan and is hash-checked against
     the DuckDB oracle; this operator applies the same diff algebra to
     real published txns (pinned in tests/test_release_diff.py)."""
-    import os
-
-    from agf_data_ingestion_spark.sources.snapshots import snapshot_read_txn
+    from agf_data_ingestion_spark.sources.snapshots import (
+        snapshot_read,
+        snapshot_read_txn,
+    )
 
     tbls = {
-        "shards": os.path.join(out_root, "shards"),
-        "datacard": os.path.join(out_root, "datacard"),
-        "policy": os.path.join(out_root, "policy"),
+        k: p
+        for k, p in _release_tables(out_root).items()
+        if k in ("shards", "datacard", "policy")
     }
-    from agf_data_ingestion_spark.sources.snapshots import snapshot_read
 
     sides = {}
     for label, txn in (("a", txn_a), ("b", txn_b)):

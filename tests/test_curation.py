@@ -55,23 +55,29 @@ def test_stage_by_stage_bit_identical(spark, release, tmp_path):
     from agf_data_ingestion_spark.plans.mixing import domain_reweight_frame
     from agf_data_ingestion_spark.sources.snapshots import snapshot_read
 
+    # each stage's rows_out is the count the datacard funnel publishes:
+    # it must equal the rows the stage really produced
+    rows_out = {s["name"]: s["rows_out"] for s in release["stages"]}
+
     def roundtrip(df, name):
         p = str(tmp_path / name)
         df.select(*_DOC_COLS).write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
+        back = spark.read.parquet(p)
+        assert back.count() == rows_out[name], name
+        return back
 
-    docs = roundtrip(t(spark, SF_SMOKE, "documents"), "s0")
-    docs = roundtrip(stage_rule_gate(spark, SF_SMOKE, docs), "s1")
-    docs = roundtrip(stage_exact_dedup(docs), "s2")
-    docs = roundtrip(stage_neardup(spark, SF_SMOKE, docs), "s3")
-    docs = roundtrip(stage_decontam(spark, SF_SMOKE, docs), "s4")
+    docs = roundtrip(t(spark, SF_SMOKE, "documents"), "input")
+    docs = roundtrip(stage_rule_gate(spark, SF_SMOKE, docs), "rule_gate")
+    docs = roundtrip(stage_exact_dedup(docs), "exact_dedup")
+    docs = roundtrip(stage_neardup(spark, SF_SMOKE, docs), "neardup")
+    docs = roundtrip(stage_decontam(spark, SF_SMOKE, docs), "decontam")
     cut = pick_cut_tile(spark, SF_SMOKE)
     assert cut == release["cut_tile"]
     cut_docs, thresholds = stage_quality_cut(spark, SF_SMOKE, docs, cut)
     assert {
         r["lang"]: r["value"] for r in thresholds.collect()
     } == release["quality_thresholds"]
-    docs = roundtrip(cut_docs, "s5")
+    docs = roundtrip(cut_docs, "quality_cut")
 
     weights = spark.createDataFrame(
         sorted(
@@ -89,6 +95,7 @@ def test_stage_by_stage_bit_identical(spark, release, tmp_path):
 
     published = snapshot_read(spark, release["tables"]["shards"])
     assert _shard_key_rows(assigned) == _shard_key_rows(published)
+    assert len(_shard_key_rows(assigned)) == rows_out["wfq_shards"]
     # weights recorded in the report match the stage-by-stage recompute
     assert release["weights"] == {r["source"]: r["weight_ppm"] for r in weights.collect()}
 

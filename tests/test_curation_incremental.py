@@ -411,6 +411,28 @@ def test_txn_atomicity_and_time_travel(spark, setup):
     assert pub_now == setup["published_ids"]
 
 
+def test_append_stage_walls_add_up(setup):
+    """Each append stage's wall runs from the end of the previous stage,
+    so building a stage frame (the probes, the candidate joins) counts:
+    the stage walls cover the run less the resolve_and_policy and
+    verify_and_report segments."""
+    rep = setup["rep"]
+    assert set(rep["segments"]) == {
+        "resolve_and_policy",
+        "gates_and_probes",
+        "wfq_assign",
+        "publish",
+        "verify_and_report",
+    }
+    walls = sum(s["wall_s"] for s in rep["stages"])
+    span = (
+        rep["wall_s"]
+        - rep["segments"]["resolve_and_policy"]
+        - rep["segments"]["verify_and_report"]
+    )
+    assert abs(walls - span) <= 0.1, (walls, span)
+
+
 # ---------------------------------------------------------------------------
 # r11 (VERDICT r10 ask #3): the probe IN-lists are routed — above
 # _PROBE_INLIST_MAX distinct keys each store probe becomes a range-pruned
