@@ -334,20 +334,11 @@ def quality_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _weights(_bg(spark, sf_dir)).select("bucket", "weight")
 
 
-#: per-language doc-count guard for the release quality-cut ntile (r11
-#: — the PRODUCTION twin of the docs_quality_pr_curve routing; this
-#: window lives inside curate_full, which the catalog plan sweep cannot
-#: see).  Above it the per-lang ntile routes through salted_rank_intkey
-#: + the exact integer ntile replay; both branches are bit-identical.
-_CUT_LANG_ROUTE = 1000
-
-
 def stage_quality_cut(
     spark: SparkSession,
     sf_dir: str,
     docs: DataFrame,
     cut_tile: int,
-    _route: int | None = None,
     *,
     caches: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -366,8 +357,11 @@ def stage_quality_cut(
     Single-exchange shape: bigram rows LEFT-join the broadcast ≤4096-row
     model, ONE groupBy(doc_id) collapses map-side to a row per doc, and
     the per-language cut ranks doc-count score rows (never text) —
-    SKEW-ROUTED above ``_CUT_LANG_ROUTE`` docs in the largest language
-    (r11; the salted decomposition, operators/skew.py).
+    SKEW-ROUTED (r11; operators/skew.py ``route_salted``): at scale the
+    per-lang ntile runs through salted_rank_intkey + the exact integer
+    ntile replay, bit-identical to the plain window.  This is the
+    PRODUCTION twin of the docs_quality_pr_curve routing, inside
+    curate_full where the catalog plan sweep cannot see it.
 
     r13 (VERDICT r12 ask #3): the kept-tile frame is CACHED — it has two
     consumers (the thresholds collect and the survivors semi-join), and
@@ -378,18 +372,15 @@ def stage_quality_cut(
     to ``caches`` when given: the caller unpersists them once both
     consumers have run (`curate_full` does)."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
         ntile_expr,
+        route_salted,
         salted_rank_intkey,
     )
 
     w = quality_model_weights(spark, sf_dir)
     scores = score_quality(w, docs)
     sd = docs.select("doc_id", "lang").join(scores, "doc_id")
-    route = _route if _route is not None else max_group_count(
-        docs.select("lang"), "lang"
-    )
-    if route > _CUT_LANG_ROUTE:
+    if route_salted(docs):
         # narrow per-doc frame, multiply consumed by the decomposition
         sd = sd.cache()
         if caches is not None:
@@ -458,17 +449,9 @@ def curate_full(
     docs = clock.checkpoint("decontam", stage_decontam(spark, sf_dir, docs))
 
     cut = pick_cut_tile(spark, sf_dir)
-    # r13 (the r12 guard-folding rule applied to the quality-cut window):
-    # the decontam stage count just materialized is an upper bound on
-    # max-docs-per-language — when it already clears the route threshold
-    # the guard job proves nothing the count didn't (both branches are
-    # bit-identical; the guard only picks the plan)
-    n_dec = clock.laps[-1]["rows_out"]
     qcut_caches: list[DataFrame] = []
     cut_docs, thresholds = stage_quality_cut(
-        spark, sf_dir, docs, cut,
-        _route=(n_dec if n_dec <= _CUT_LANG_ROUTE else None),
-        caches=qcut_caches,
+        spark, sf_dir, docs, cut, caches=qcut_caches
     )
     thresh_rows = {r["lang"]: int(r["value"]) for r in thresholds.collect()}
     docs = clock.checkpoint("quality_cut", cut_docs)
@@ -478,7 +461,6 @@ def curate_full(
     # (the curate_incremental rule)
     for _c in qcut_caches:
         _c.unpersist()
-    n_cut = clock.laps[-1]["rows_out"]
 
     weights = domain_reweight_frame(docs).select("source", "weight_ppm")
     wrows = {r["source"]: int(r["weight_ppm"]) for r in weights.collect()}
@@ -487,23 +469,9 @@ def curate_full(
     )
     clock.lap("doremi_weights", len(wrows))
 
-    # r12 (VERDICT r11 ask #7, the curriculum guard-folding rule): the
-    # interleave's skew-route guard is max-docs-per-source, and the
-    # quality-cut stage count just materialized is an UPPER BOUND on it —
-    # when the bound already clears the route threshold the guard scan
-    # proves nothing the count didn't (both branches are bit-identical
-    # anyway; the guard only picks the cheaper plan), so skip that Spark
-    # job and fall back to the honest aggregate only above the bound.
-    from agf_data_ingestion_spark.operators.shards import _WI_SRC_ROUTE
-
     assigned, n_final = _materialize(
         assign_shards(
-            weighted_interleave(
-                docs,
-                weights,
-                seed=seed,
-                source_route=(n_cut if n_cut <= _WI_SRC_ROUTE else None),
-            ),
+            weighted_interleave(docs, weights, seed=seed),
             budget_tokens=budget_tokens,
             seed=seed,
             order_key="_wfq",
@@ -1044,23 +1012,11 @@ def curate_incremental(
     wdf = spark.createDataFrame(
         sorted(weights.items()), "source string, weight_ppm long"
     )
-    # r12: the quality-cut stage count bounds max-docs-per-source — skip
-    # the guard job when the bound already picks the plain branch (see
-    # the curate_full twin)
-    from agf_data_ingestion_spark.operators.shards import _WI_SRC_ROUTE
-
-    n_gated = clock.laps[-1]["rows_out"]
     assigned, n_final = _materialize(
         assign_shards(
             # horizon=False: an append extends a release — the one-epoch
             # exhaustion cut would starve a small batch (see shards.py)
-            weighted_interleave(
-                docs,
-                wdf,
-                seed=seed,
-                horizon=False,
-                source_route=(n_gated if n_gated <= _WI_SRC_ROUTE else None),
-            ),
+            weighted_interleave(docs, wdf, seed=seed, horizon=False),
             budget_tokens=budget_tokens,
             seed=seed,
             order_key="_wfq",

@@ -63,14 +63,6 @@ def _wfq_t_expr(cum_col: str, w_col: str = "weight_ppm") -> str:
     )
 
 
-#: per-source row-count guard for the interleave's running sum: above it
-#: the cumsum runs through the salted-cell decomposition
-#: (operators/skew.py salted_prefix_sum) instead of one whole-source
-#: window — bit-identical either way (integer adds are order-free); the
-#: production default keeps small batches on the cheap plain branch
-_WI_SRC_ROUTE = 100_000
-
-
 def weighted_interleave(
     docs: DataFrame,
     weights: DataFrame,
@@ -80,7 +72,6 @@ def weighted_interleave(
     id_col: str = "doc_id",
     source_col: str = "source",
     horizon: bool = True,
-    source_route: int | None = None,
 ) -> DataFrame:
     """Deterministic WEIGHTED interleave of a multi-source corpus (r8,
     VERDICT r7 ask #5 — the consumer of ``docs_domain_reweight``'s
@@ -102,15 +93,14 @@ def weighted_interleave(
     oracle twin of this two-pass pipeline.
 
     Scale shape (r10, VERDICT r9 ask #2): the per-source running sum is
-    SKEW-ROUTED — at or below ``source_route`` rows in the largest
-    source (default ``_WI_SRC_ROUTE``; real LLM mixes put 60-80% of
-    tokens in one crawl source) it is one keyed window; above, the
-    salted-cell decomposition ``salted_prefix_sum`` (operators/skew.py),
-    bit-identical by the order-free-integer-adds rule and pinned in
-    tests/test_skew.py.  Plus a K-row horizon aggregate and one
-    broadcast; no corpus collect beyond the 1-row routing guard."""
+    SKEW-ROUTED (operators/skew.py ``route_salted``; real LLM mixes put
+    60-80% of tokens in one crawl source) — one keyed window below the
+    rule's size, else the salted-cell decomposition
+    ``salted_prefix_sum``, bit-identical by the order-free-integer-adds
+    rule and pinned in tests/test_skew.py.  Plus a K-row horizon
+    aggregate and one broadcast; no corpus collect."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_prefix_sum,
     )
 
@@ -123,12 +113,7 @@ def weighted_interleave(
     d = d.join(
         F.broadcast(weights.select(source_col, "weight_ppm")), source_col
     )
-    route = (
-        source_route
-        if source_route is not None
-        else max_group_count(docs.select(source_col), source_col)
-    )
-    if route > _WI_SRC_ROUTE:
+    if route_salted(docs):
         d = salted_prefix_sum(
             d, [source_col], "n_tokens", "_h", id_col, out_col="_cum"
         )

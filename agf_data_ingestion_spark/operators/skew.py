@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from agf_data_ingestion_spark.plans.base import DEC_MONEY
+from agf_data_ingestion_spark.plans.base import DEC_MONEY, size_estimate
 
 
 def salted_sum_count(
@@ -49,18 +49,27 @@ def salted_sum_count(
     )
 
 
-def max_group_count(df: DataFrame, key_col: str) -> int:
-    """Routing guard for the skewed-window decompositions below: the max
-    per-key row count, as ONE map-combined aggregate collected to the
-    driver (corpus-size-independent driver traffic — the
-    `_overlap_route` class from plans/mixing.py)."""
-    row = (
-        df.groupBy(key_col)
-        .agg(F.count("*").alias("_n"))
-        .agg(F.coalesce(F.max("_n"), F.lit(0)).alias("_m"))
-        .collect()[0]
+def route_salted(corpus: DataFrame) -> bool:
+    """THE skew-routing rule for every keyed window over a
+    low-cardinality key (lang, source, epoch, event_type): True — run the
+    salted decomposition below — iff the optimizer's size estimate of
+    ``corpus`` exceeds the session's
+    ``spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes``.
+    Below that size no partition of the input can be skewed by AQE's
+    own definition, so the plain ``Window`` is the plan.  Both plans
+    give the same rows; a missing or overflowing estimate routes salted
+    (slower at small scale, never wrong).  Reads only the plan: no
+    Spark job.
+
+    ``corpus`` is the input the window's rows come from, taken before
+    any join (plans/base.py ``size_estimate``).  Tests force the at-scale
+    plan by monkeypatching this one function."""
+    spark = corpus.sparkSession
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
     )
-    return int(row["_m"])
+    est = size_estimate(corpus)
+    return est is None or est > limit
 
 
 #: Internal column names every salted helper materializes; user-facing
@@ -414,8 +423,7 @@ def salted_rank_intkey(
 
     Exact for ANY key distribution; cell BALANCE degrades toward the
     single window only when the key is near-constant (all rows in one
-    value bucket) — no worse than the undecomposed plan, and the
-    routing guard should keep such inputs on the plain branch.  The
+    value bucket) — no worse than the undecomposed plan.  The
     cell table is shuffle_hash pinned (many tiny parts make it
     corpus-shaped — never broadcast).
 

@@ -15,9 +15,9 @@ tests/test_plan_sweep.py closed it for the 170 catalog queries:
    ``ALLOW_UNREGISTERED`` with a written reason.  A NEW production
    window site fails the suite until it registers.
 2. **Scale shape** — every registered builder returns the frame(s) a
-   real invocation computes, FORCED onto the at-scale decomposed branch
-   where the function routes (``_route``/``source_route`` = 10**9, the
-   same forcing the catalog sweep applies), and the sweep walks their
+   real invocation computes; the sweep builds them with the skew rule
+   (operators/skew.py ``route_salted``) forced onto the at-scale salted
+   plan, the same forcing the catalog sweep applies, and walks their
    optimized plans with the identical BAD_KEYS / WindowGroupLimit /
    salt-cell rules.
 
@@ -94,9 +94,7 @@ def _curation_frames(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     )
 
     docs = _docs(spark, sf_dir)
-    survivors, thresholds = stage_quality_cut(
-        spark, sf_dir, docs, cut_tile=10, _route=10**9
-    )
+    survivors, thresholds = stage_quality_cut(spark, sf_dir, docs, cut_tile=10)
     return [
         stage_exact_dedup(docs),
         stage_neardup(spark, sf_dir, docs),
@@ -149,8 +147,7 @@ def _shards_frames(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         docs.select("source").distinct().withColumn("weight_ppm", F.lit(100_000))
     )
     return [
-        # forced onto the salted-cell decomposition (at-scale branch)
-        weighted_interleave(docs, weights, source_route=10**9),
+        weighted_interleave(docs, weights),
         # the PRE-checkpoint plan assign_shards truncates (r11 blind spot)
         shuffle_order_plan(docs),
         # the post-checkpoint per-physical-partition windows (_part ≈

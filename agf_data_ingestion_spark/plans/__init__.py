@@ -48,13 +48,9 @@ def _pinned_session(fn):
     SparkSession (the driver builds its own): timestamps must render/parse
     in UTC to match the DuckDB oracle's naive timestamps."""
 
-    def wrapped(spark, sf_dir, **kwargs):
-        # kwargs forward the optional test hooks (the skew-routing
-        # ``_route`` override the plan-sweep test uses to force the
-        # decomposed branch) — the driver only ever passes the two
-        # positionals
+    def wrapped(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        return fn(spark, sf_dir, **kwargs)
+        return fn(spark, sf_dir)
 
     wrapped.__name__ = getattr(fn, "__name__", "query")
     wrapped.__doc__ = fn.__doc__

@@ -268,27 +268,17 @@ SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM (
 # ---------------------------------------------------------------------------
 
 
-#: per-source doc-count guard (r11 — found by the plan-sweep test, the
-#: same whole-partition window class as docs_preference_pairs): above it
-#: the collision rank routes through salted_rank_intkey (doc_id is the
-#: unique integer sort key).  Straddles the corpora: 25 docs/source at
-#: sf0.01 -> plain; 250 at sf0.1 -> decomposed.
-_NC_SRC_ROUTE = 100
-
-
-def docs_name_collision(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_name_collision(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source collision numbering in doc_id order.  SKEW-ROUTED
+    (operators/skew.py ``route_salted``): at scale the rank runs through
+    salted_rank_intkey (doc_id is the unique integer sort key)."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_rank_intkey,
     )
 
     d = t(spark, sf_dir, "documents")
-    route = _route if _route is not None else max_group_count(
-        d.select("source"), "source"
-    )
-    if route > _NC_SRC_ROUTE:
+    if route_salted(d):
         ranked = salted_rank_intkey(
             d.select("doc_id", "source").cache(),  # narrow, 3 consumers
             ["source"], "doc_id", "doc_id",
@@ -600,24 +590,17 @@ WHERE event_type = 'purchase' AND props NOT LIKE '%/' AND props NOT LIKE '%.DS_S
 # ---------------------------------------------------------------------------
 
 
-#: per-event_type row guard for the median/MAD rank windows (r11 —
-#: found by the plan-sweep test): event_type has FIVE values, so the
-#: keyed rank funnels corpus/5 through one task at any scale.  Above
-#: the guard the (value, event_id) rank + partition count route through
-#: salted_rank_dblkey (binary64 value-range bucketing — the sort key is
-#: a double); row_number/count are exact integers, so both branches are
-#: bit-identical and the oracle keeps the single-window SQL.  Straddles
-#: the corpora: 2017 rows in the largest type at sf0.01 -> plain;
-#: 20302 at sf0.1 -> decomposed.
-_EVT_TYPE_ROUTE = 10_000
-
-
-def _evt_ranked(df: DataFrame, val_col: str, route: int) -> DataFrame:
-    """(df + rn + n) ranked by (val, event_id) within event_type —
-    skew-routed (see ``_EVT_TYPE_ROUTE``)."""
+def _evt_ranked(df: DataFrame, val_col: str, salted: bool) -> DataFrame:
+    """(df + rn + n) ranked by (val, event_id) within event_type.
+    event_type has FIVE values, so the keyed rank funnels corpus/5
+    through one task; ``salted`` (the caller's ``route_salted`` verdict
+    on the events scan) runs it through salted_rank_dblkey instead
+    (binary64 value-range bucketing — the sort key is a double;
+    row_number/count are exact integers, so both plans are
+    bit-identical and the oracle keeps the single-window SQL)."""
     from agf_data_ingestion_spark.operators.skew import salted_rank_dblkey
 
-    if route > _EVT_TYPE_ROUTE:
+    if salted:
         # narrow (event_type, value, event_id) frame; the decomposition's
         # bounds aggregate + both salted branches re-scan it otherwise
         return salted_rank_dblkey(
@@ -629,21 +612,12 @@ def _evt_ranked(df: DataFrame, val_col: str, route: int) -> DataFrame:
     )
 
 
-def _evt_route(spark: SparkSession, sf_dir: str) -> int:
-    from agf_data_ingestion_spark.operators.skew import max_group_count
+def events_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from agf_data_ingestion_spark.operators.skew import route_salted
 
-    return max_group_count(
-        t(spark, sf_dir, "events").select("event_type"), "event_type"
-    )
-
-
-def events_median_value(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
     e = t(spark, sf_dir, "events")
-    route = _route if _route is not None else _evt_route(spark, sf_dir)
     ranked = _evt_ranked(
-        e.select("event_type", "value", "event_id"), "value", route
+        e.select("event_type", "value", "event_id"), "value", route_salted(e)
     )
     odd_mid = (F.col("n") % 2 == 1) & (F.col("rn") == F.expr("(n + 1) div 2"))
     even_mid = (F.col("n") % 2 == 0) & (
@@ -678,9 +652,7 @@ FROM mid GROUP BY event_type
 _MAD_CUTOFF = 3.0 * 1.4826  # 3σ-equivalent under normality
 
 
-def events_mad_outliers(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection per event_type: median absolute deviation
     (MAD), the 3σ-equivalent cutoff ``3·1.4826·MAD``, and the count of
     values beyond it — the rep-filtering shape a training-data pipeline
@@ -691,12 +663,14 @@ def events_mad_outliers(
     decimal-exact two-row average (same as events_median_value); every
     deviation is the same IEEE double in both engines.  Scale shape: two
     chained ranks on the same event_type key + one broadcast of the
-    5-row median table — and both ranks are SKEW-ROUTED above
-    ``_EVT_TYPE_ROUTE`` rows per type (r11; see guard note)."""
+    5-row median table — and both ranks are SKEW-ROUTED by one
+    ``route_salted`` verdict on the events scan (see ``_evt_ranked``)."""
+    from agf_data_ingestion_spark.operators.skew import route_salted
+
     e = t(spark, sf_dir, "events")
-    route = _route if _route is not None else _evt_route(spark, sf_dir)
+    salted = route_salted(e)
     ranked = _evt_ranked(
-        e.select("event_type", "value", "event_id"), "value", route
+        e.select("event_type", "value", "event_id"), "value", salted
     )
     is_mid = ((F.col("n") % 2 == 1) & (F.col("rn") == F.expr("(n + 1) div 2"))) | (
         (F.col("n") % 2 == 0)
@@ -722,7 +696,7 @@ def events_mad_outliers(
         F.abs(F.col("value") - F.col("med")).alias("d"),
     ).cache()
     dranked = _evt_ranked(
-        dev.select("event_type", "d", "event_id"), "d", route
+        dev.select("event_type", "d", "event_id"), "d", salted
     )
     is_mid2 = ((F.col("n") % 2 == 1) & (F.col("rn") == F.expr("(n + 1) div 2"))) | (
         (F.col("n") % 2 == 0)

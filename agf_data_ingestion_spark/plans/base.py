@@ -5,6 +5,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,6 +74,19 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _BDIM_MAX_BYTES = 64 << 20
 
 
+def size_estimate(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None when the
+    plan cannot produce one.  Plan-only: no Spark job.  Scans estimate
+    from file sizes (the evidence Spark's own planner uses); a
+    ``localCheckpoint``ed frame keeps its source's estimate; a join
+    estimates the PRODUCT of its sides, so callers sizing a corpus ask
+    before joining."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Py4JError:
+        return None
+
+
 def bdim(df: DataFrame) -> DataFrame:
     """Size-guarded broadcast hint for LINEARLY-SCALING dimension frames
     (part / customer / supplier and frames derived from them) — VERDICT
@@ -89,9 +103,8 @@ def bdim(df: DataFrame) -> DataFrame:
     query sets) keep plain ``F.broadcast`` — they are bounded at any sf.
     Corpus-sized frames must NEVER go through either form (the
     ``shuffle_hash`` rule in CLAUDE.md)."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # estimate unavailable: leave the choice to AQE
+    est = size_estimate(df)
+    if est is None:  # estimate unavailable: leave the choice to AQE
         return df
     return F.broadcast(df) if est <= _BDIM_MAX_BYTES else df
 

@@ -465,22 +465,7 @@ FROM sel WHERE i <= n_grams - {_WIN_W - 1}
 # ---------------------------------------------------------------------------
 
 
-#: per-language doc-count guard (r11, VERDICT r10 ask #1): `lang` has 5
-#: values (en ≈ 40%), so the keyed ntile window funnels a corpus share
-#: through one task.  Above the guard the cut routes through the
-#: DOUBLE-key salted rank (the LM score is a BIGINT/BIGINT→DOUBLE
-#: ratio; operators/skew.py salted_rank_dblkey buckets the binary64
-#: value monotonically) with ntile replayed as integer math
-#: (ntile_expr).  (score DESC, doc_id ASC) ranks come from the REVERSE
-#: order (score ASC, doc_id DESC) as n - rw + 1.  Straddles the
-#: corpora: 218 docs in the largest lang at sf0.01 -> plain; 2059 at
-#: sf0.1 -> decomposed.
-_LMB_LANG_ROUTE = 1000
-
-
-def docs_lm_buckets(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's language-model partition (Wenzek et al. 2020): within each
     language, rank documents by LM score and cut into equal thirds —
     ``head`` (most fluent under the corpus model), ``middle``, ``tail``.
@@ -489,11 +474,16 @@ def docs_lm_buckets(
     ``ntile(3)`` over (score DESC, doc_id) — the unique tiebreaker makes
     the cut deterministic, and both engines assign remainder rows to the
     earlier buckets.  Scale: the LM model build dominates (see
-    ``docs_bigram_lm_score``); the bucket pass is SKEW-ROUTED above
-    ``_LMB_LANG_ROUTE`` docs in the largest language (see guard note)."""
+    ``docs_bigram_lm_score``); the bucket pass is SKEW-ROUTED
+    (operators/skew.py ``route_salted``): `lang` has 5 values (en ≈
+    40%), so at scale the cut runs through the DOUBLE-key salted rank
+    (the LM score is a BIGINT/BIGINT→DOUBLE ratio; salted_rank_dblkey
+    buckets the binary64 value monotonically) with ntile replayed as
+    integer math (ntile_expr).  (score DESC, doc_id ASC) ranks come
+    from the REVERSE order (score ASC, doc_id DESC) as n - rw + 1."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
         ntile_expr,
+        route_salted,
         salted_rank_dblkey,
     )
 
@@ -501,10 +491,7 @@ def docs_lm_buckets(
     docs = t(spark, sf_dir, "documents")
     langs = docs.select("doc_id", "lang")
     joined = scored.join(langs, "doc_id")
-    route = _route if _route is not None else max_group_count(
-        docs.select("lang"), "lang"
-    )
-    if route > _LMB_LANG_ROUTE:
+    if route_salted(docs):
         # narrow (doc_id, lang, score) frame over the EXPENSIVE LM-score
         # build — cache before the decomposition's three consumers
         joined = joined.cache()
@@ -979,22 +966,8 @@ def _bpe_ctes() -> list[str]:
 #: curriculum schedule length (training steps the competence ramps over)
 _CURR_STEPS = 1000
 
-#: per-source doc-count guard (r10, VERDICT r9 ask #2): above it the
-#: per-source percentile runs through the salted-rank decomposition
-#: instead of one whole-source window.  Both branches are BIT-IDENTICAL
-#: — the decomposition computes the same (rank-1)/(n-1) double — so the
-#: oracle keeps the single percent_rank window and the guard never
-#: crosses engines; it only puts the generated corpora on opposite
-#: sides (sf0.01 = 25 docs/source -> plain; sf0.1 = 250 -> decomposed)
-#: so both branches stay oracle-exercised.  Real LLM mixes put 60-80%
-#: of tokens in ONE crawl source — at 50 B rows the whole-source window
-#: is the canonical scale-killer (SCALE.md skew rung).
-_CURR_SRC_ROUTE = 100
 
-
-def docs_curriculum_order(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Competence-based curriculum (Platanios et al. NAACL'19): each doc
     gets a DIFFICULTY (mean inverse corpus frequency of its words — rare
     words are hard; rarity instead of the paper's log-likelihood because
@@ -1012,8 +985,9 @@ def docs_curriculum_order(
     a map-combined groupBy(word) and joins back on the exploded words
     with shuffle_hash pinned on BOTH sides (vocab is corpus-derived —
     never broadcast, the corpus-broadcast ban); per-doc reduce is
-    map-combined; the per-source percentile is SKEW-ROUTED (r10): below
-    ``_CURR_SRC_ROUTE`` docs in the largest source it is one keyed
+    map-combined; the per-source percentile is SKEW-ROUTED (r10;
+    operators/skew.py ``route_salted`` — real LLM mixes put 60-80% of
+    tokens in ONE crawl source): below the rule's size it is one keyed
     percent_rank window; above, the salted-rank decomposition
     (operators/skew.py ``salted_rank_intkey`` — rank within (source,
     difficulty-range salt) cells + cell-count offsets, value-monotone
@@ -1021,7 +995,8 @@ def docs_curriculum_order(
     doc_id) order) with ``(dr-1)/(n-1)`` computed through the SAME
     binary64 division percent_rank uses, so both branches are
     bit-identical and the oracle keeps the single-window form."""
-    d = t(spark, sf_dir, "documents").select(
+    docs = t(spark, sf_dir, "documents")
+    d = docs.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
     )
     freq = d.groupBy("word").agg(
@@ -1052,23 +1027,16 @@ def docs_curriculum_order(
         )
     )
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_rank_intkey,
     )
 
-    # r11 (ADVICE r10): per_doc is a NARROW 1-row-per-doc frame consumed
-    # by salted_rank_intkey's min/max aggregate AND both decomposition
-    # branches AND the routing guard — cache it (the r4
-    # multiply-consumed-narrow-frame rule) and derive the guard from it
-    # instead of a third documents scan (every doc yields ≥1 word, so
-    # per-source counts match the raw table).
-    per_doc = per_doc.cache()
-    route = _route if _route is not None else max_group_count(
-        per_doc.select("source"), "source"
-    )
-    if route > _CURR_SRC_ROUTE:
+    if route_salted(docs):
+        # per_doc is a NARROW 1-row-per-doc frame consumed by
+        # salted_rank_intkey's min/max aggregate AND both decomposition
+        # branches — cache it (the r4 multiply-consumed-narrow-frame rule)
         ranked = salted_rank_intkey(
-            per_doc, ["source"], "difficulty", "doc_id"
+            per_doc.cache(), ["source"], "difficulty", "doc_id"
         )
         scored = ranked.select(
             "doc_id",

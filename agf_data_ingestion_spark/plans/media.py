@@ -130,22 +130,7 @@ def docs_export_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-source doc-count guard for the export-manifest windows (r11 —
-#: found by the sweep once `export_group` joined the bad-key list:
-#: export_group IS `source` renamed, 20 values, so the entry-sequence
-#: rank pushed corpus/20 through one task).  Above the guard both
-#: ranks route through the string-prefix salted rank
-#: (salted_rank_hexkey with k=8 — paths share the constant 'docs/'
-#: head, so the salt buckets on the id's leading digits; a string
-#: prefix is monotone in string order for ANY key).  Straddles the
-#: corpora: 25 docs/source at sf0.01 -> plain; 250 at sf0.1 ->
-#: decomposed.
-_ZIP_SRC_ROUTE = 100
-
-
-def docs_export_zip_manifest(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_export_zip_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicted entry table of every archive ``docs_export_zip`` builds:
     per entry its collision-numbered name (the OP-WIN-DEDUPNAME window —
     occurrence index over the group's sorted-path write order), its
@@ -153,11 +138,16 @@ def docs_export_zip_manifest(
     (reference :151-158).  Cross-validated against the REAL archive bytes
     in tests/test_media.py::test_zip_manifest_matches_archive; plain SQL,
     so the driver oracle-checks it (the byte digest stays pytest-only).
-    SKEW-ROUTED above ``_ZIP_SRC_ROUTE`` docs in the largest group."""
+
+    SKEW-ROUTED (operators/skew.py ``route_salted``): export_group IS
+    `source` renamed, 20 values, so at scale both ranks run through the
+    string-prefix salted rank (salted_rank_hexkey with k=8 — paths share
+    the constant 'docs/' head, so the salt buckets on the id's leading
+    digits; a string prefix is monotone in string order for ANY key)."""
     from pyspark.sql.window import Window
 
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_rank_hexkey,
     )
 
@@ -174,11 +164,8 @@ def docs_export_zip_manifest(
         ).alias("path"),
         F.octet_length("text").cast("long").alias("entry_bytes"),
     )
-    route = _route if _route is not None else max_group_count(
-        d.select("source"), "source"
-    )
     # paths are unique (doc_id embedded), so every window order is total
-    if route > _ZIP_SRC_ROUTE:
+    if route_salted(d):
         e = e.cache()  # narrow; both decompositions + their cell tables
         seq = salted_rank_hexkey(
             e, ["export_group"], "path", "path",

@@ -703,22 +703,9 @@ JOIN sizes sb ON i.src_b = sb.source
 _WFQ_SCALE = 1_000_000_000
 _SHARD_BUDGET = 4000
 
-#: per-source doc-count guard for the running-sum routing: at or below
-#: it the plain keyed window is cheapest; above it the per-source cumsum
-#: runs through the salted-cell decomposition.  Both branches are
-#: BIT-IDENTICAL (integer adds are order-free), so the oracle keeps the
-#: single-window form and the guard never crosses engines — it only has
-#: to put the generated corpora on opposite sides (sf0.01 = 25
-#: docs/source -> plain; sf0.1 = 250 -> decomposed) so both branches
-#: stay oracle-exercised, mirroring the docs_source_overlap_auto flip.
-_RWS_SRC_ROUTE = 100
-
 
 def _rws_ts(
-    spark: SparkSession,
-    sf_dir: str,
-    _route: int | None = None,
-    _wts: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, _wts: DataFrame | None = None
 ) -> DataFrame:
     """The horizon-cut WFQ stream (one row per surviving doc, composite
     order key ``_ordk`` attached) — every row-level step of
@@ -739,11 +726,11 @@ def _rws_ts(
     r10 (ask #2): the per-source cumulative sum routes through
     ``salted_prefix_sum`` (operators/skew.py — rank within (source,
     hex-prefix salt) cells + cell-total offsets ≡ the one keyed window)
-    above ``_RWS_SRC_ROUTE`` docs in the largest source; real LLM mixes
+    when ``route_salted`` picks it; real LLM mixes
     put 60-80% of tokens in one crawl source, exactly the
     whole-source-in-one-task shape the keyed window plans."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_prefix_sum,
     )
 
@@ -763,10 +750,7 @@ def _rws_ts(
             16,
         ).alias("h"),
     ).join(F.broadcast(wts), "source")
-    route = _route if _route is not None else max_group_count(
-        d.select("source"), "source"
-    )
-    if route > _RWS_SRC_ROUTE:
+    if route_salted(d):
         ts = salted_prefix_sum(
             base, ["source"], "n_tokens", "h", "doc_id", out_col="cum"
         )
@@ -802,17 +786,14 @@ def _rws_ts(
 
 
 def _rws_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    _route: int | None = None,
-    _wts: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, _wts: DataFrame | None = None
 ) -> DataFrame:
     """``_rws_ts`` with ``shard_id`` assigned by the two-pass
     distributed prefix sum (operators/shards.py ``assign_shards``)."""
     from agf_data_ingestion_spark.operators.shards import assign_shards
 
     return assign_shards(
-        _rws_ts(spark, sf_dir, _route, _wts),
+        _rws_ts(spark, sf_dir, _wts),
         budget_tokens=_SHARD_BUDGET,
         order_key="_ordk",
         tokens_col="n_tokens",

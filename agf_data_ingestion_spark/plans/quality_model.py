@@ -208,51 +208,24 @@ def docs_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-language doc-count guard for the calibration windows (r11,
-#: VERDICT r10 ask #1): the planted ``lang`` has THREE values — each
-#: language partition is corpus/3 through ONE window task at any scale.
-#: Above the guard the percent_rank / ntile route through
-#: salted_rank_intkey + the exact integer/binary64 replays
-#: (operators/skew.py pct_rank_expr / ntile_expr); both branches are
-#: bit-identical, so the oracle keeps the single-window SQL.  Straddles
-#: the corpora: ~170 docs/lang at sf0.01 -> plain; ~1700 at sf0.1 ->
-#: decomposed (the guard counts ALL docs per planted lang — one
-#: doc_id-column scan — as a routing proxy for the held-out subset).
-_QM_LANG_ROUTE = 500
-
-
-def _qm_lang_route(spark: SparkSession, sf_dir: str) -> int:
-    from agf_data_ingestion_spark.operators.skew import max_group_count
-
-    d = t(spark, sf_dir, "documents").select("doc_id")
-    b = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("qm:"), F.col("doc_id").cast("string"))), 1, 10
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-    )
-    return max_group_count(d.select((b % 3).alias("lang")), "lang")
-
-
-def docs_quality_apply(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_quality_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score the HELD-OUT 20%: int64 dot product of bucket counts with
     the trained weights, HIGH iff score > 0, per-language percent-rank
     calibration; ``correct`` is the planted self-evaluation (pytest pins
     accuracy ≥ 95%).  Single-exchange corpus shape (see module
-    docstring); the calibration window is SKEW-ROUTED above
-    ``_QM_LANG_ROUTE`` docs per language (r11)."""
+    docstring).  The planted ``lang`` has THREE values — each language
+    partition is corpus/3 through ONE window task — so the calibration
+    window is SKEW-ROUTED (r11; operators/skew.py ``route_salted``)
+    through salted_rank_intkey + the exact binary64 replay
+    ``pct_rank_expr``, bit-identical to the single-window SQL."""
     from agf_data_ingestion_spark.operators.skew import (
         pct_rank_expr,
+        route_salted,
         salted_rank_intkey,
     )
 
-    bg = _bg(spark, sf_dir)  # r12: cached — see _bg
+    c = _corpus(spark, sf_dir)
+    bg = _bigrams(c).cache()  # r12: the family's shared cache — see _bg
     w = _weights(bg)
     held = bg.filter(~F.col("is_train")).select("doc_id", "lang", "hi", "bucket")
     joined = held.join(
@@ -261,8 +234,7 @@ def docs_quality_apply(
     scores = joined.groupBy("doc_id", "lang", "hi").agg(
         F.coalesce(F.sum("weight"), F.lit(0)).cast("long").alias("score")
     )
-    route = _route if _route is not None else _qm_lang_route(spark, sf_dir)
-    if route > _QM_LANG_ROUTE:
+    if route_salted(c):
         # the narrow 1-row-per-doc scores frame feeds the decomposition's
         # bounds aggregate AND both salted branches — cache it (the r4 /
         # curriculum multiply-consumed-narrow-frame rule) or the corpus
@@ -290,9 +262,7 @@ _PR_TILES = 20
 _PPM = 1_000_000
 
 
-def docs_quality_pr_curve(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall SWEEP for the trained gate (r8, VERDICT r7 ask
     #6): a deployer picks a THRESHOLD, not a model — this emits the
     exact-integer confusion counts at every per-language ntile cut of
@@ -306,15 +276,16 @@ def docs_quality_pr_curve(
     int64, so the whole curve hash-matches the oracle).  Scale shape:
     the corpus collapses to 1 row/doc (the apply shape), then to an
     N-row tile table; the curve is window math on N rows.  The per-lang
-    ntile is SKEW-ROUTED above ``_QM_LANG_ROUTE`` docs per language
-    (r11 — ntile replayed as integer math on the decomposed rank,
-    operators/skew.py ntile_expr)."""
+    ntile is SKEW-ROUTED (r11; operators/skew.py ``route_salted`` —
+    ntile replayed as integer math on the decomposed rank, ntile_expr)."""
     from agf_data_ingestion_spark.operators.skew import (
         ntile_expr,
+        route_salted,
         salted_rank_intkey,
     )
 
-    bg = _bg(spark, sf_dir)  # r12: cached — see _bg
+    c = _corpus(spark, sf_dir)
+    bg = _bigrams(c).cache()  # r12: the family's shared cache — see _bg
     w = _weights(bg)
     held = bg.filter(~F.col("is_train")).select("doc_id", "lang", "hi", "bucket")
     scores = (
@@ -322,8 +293,7 @@ def docs_quality_pr_curve(
         .groupBy("doc_id", "lang", "hi")
         .agg(F.coalesce(F.sum("weight"), F.lit(0)).cast("long").alias("score"))
     )
-    route = _route if _route is not None else _qm_lang_route(spark, sf_dir)
-    if route > _QM_LANG_ROUTE:
+    if route_salted(c):
         # cache: see docs_quality_apply (same decomposition fan-out)
         scores = scores.cache()
         tiled = salted_rank_intkey(scores, ["lang"], "score", "doc_id").select(
@@ -506,20 +476,7 @@ QUERIES: dict[str, QuerySpec] = {
 _DP_D = _D
 
 
-#: per-source doc-count guard (r11, VERDICT r10 ask #1): above it the
-#: two per-source row_number windows + the count(*) window route through
-#: ONE salted-rank decomposition — rw (score asc, doc_id desc) comes
-#: from salted_rank_intkey and rb = n - rw + 1, because (score DESC,
-#: doc_id ASC) is the exact REVERSE total order of (score ASC, doc_id
-#: DESC) and row numbers over reverse orders sum to n+1.  Straddles the
-#: corpora: 25 docs/source at sf0.01 -> plain; 250 at sf0.1 ->
-#: decomposed (the docs_curriculum_order flip).
-_DPO_SRC_ROUTE = 100
-
-
-def docs_preference_pairs(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference pairs for DPO-style training (Rafailov et al. 2023):
     within each source, rank the REAL documents by their trained quality
     score and pair the k-th best with the k-th worst — the standard
@@ -537,12 +494,15 @@ def docs_preference_pairs(
     Scale shape: ONE corpus bigram scan collapsing map-side to a row per
     doc (broadcast ≤4096-row model), then per-source ranks over
     1-row-per-doc score frames — the corpus text is never windowed, and
-    the ranks are SKEW-ROUTED above ``_DPO_SRC_ROUTE`` docs in the
-    largest source (r11; see guard note — one decomposition serves both
-    rank directions and the partition count).
+    the ranks are SKEW-ROUTED (r11; operators/skew.py ``route_salted``):
+    at scale the two row_number windows and the count(*) window become
+    ONE salted-rank decomposition — rw (score asc, doc_id desc) from
+    salted_rank_intkey and rb = n - rw + 1, because (score DESC, doc_id
+    ASC) is the exact REVERSE total order and row numbers over reverse
+    orders sum to n+1.
     """
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_rank_intkey,
     )
 
@@ -586,10 +546,7 @@ def docs_preference_pairs(
     sd = d.select("doc_id", "source").join(scores, "doc_id", "left").na.fill(
         {"score": 0}
     )
-    route = _route if _route is not None else max_group_count(
-        d.select("source"), "source"
-    )
-    if route > _DPO_SRC_ROUTE:
+    if route_salted(d):
         # rw = row_number over (score ASC, doc_id DESC) — the integer key
         # decomposition with the NEGATED doc_id as ascending tiebreaker;
         # rb = n - rw + 1 (reverse-order row numbers sum to n+1).  sd is

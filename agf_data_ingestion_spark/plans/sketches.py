@@ -163,21 +163,7 @@ FROM sk, ex
 _QK = 256  # sample size per group
 
 
-#: per-event_type row guard for the EXACT-q50 ground-truth rank (r11 —
-#: found by the node-local plan-sweep fix: the sample branch's
-#: WindowGroupLimit had been exonerating the exact branch's corpus
-#: window; event_type has 5 values = corpus/5 per task).  Above the
-#: guard the exact rank routes through salted_rank_dblkey with
-#: nulls_last (the sample branch stays a plain window — its input is
-#: the WindowGroupLimit-bounded ≤ _QK×types k-min sample).  Straddles
-#: the corpora: 2017 rows in the largest type at sf0.01 -> plain;
-#: 20302 at sf0.1 -> decomposed.
-_QS_TYPE_ROUTE = 10_000
-
-
-def events_quantile_sketch(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def events_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type quantile estimates from a deterministic uniform
     sample: the ``_QK`` events with the smallest md5(event_id) hash ARE a
     uniform random sample (md5 is uniform, event_id is unique), and like
@@ -190,10 +176,14 @@ def events_quantile_sketch(
     (value, event_id)-sorted sample — exact integer arithmetic, no
     interpolation, so both engines select the identical element.  The exact
     q50 over the full data (same convention) rides along as ground truth —
-    SKEW-ROUTED above ``_QS_TYPE_ROUTE`` rows per type (r11).
+    SKEW-ROUTED (r11; operators/skew.py ``route_salted``): event_type has
+    5 values = corpus/5 per task, so at scale the exact rank runs
+    through salted_rank_dblkey with nulls_last.  The sample side stays a
+    plain window — its input is the WindowGroupLimit-bounded ≤ _QK×types
+    k-min sample.
     """
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_rank_dblkey,
     )
 
@@ -237,9 +227,6 @@ def events_quantile_sketch(
         ]
         return ranked.groupBy("event_type").agg(F.max("n").alias("n_rows"), *aggs)
 
-    route = _route if _route is not None else max_group_count(
-        e.select("event_type"), "event_type"
-    )
     sample = _k_min(base, ["event_type"], k=_QK)
     est = _q_cols(
         sample, {"q25_est": 0.25, "q50_est": 0.5, "q75_est": 0.75}, False
@@ -247,7 +234,7 @@ def events_quantile_sketch(
         "event_type", F.col("n_rows").alias("n_sampled"), "q25_est", "q50_est", "q75_est"
     )
     exact = _q_cols(
-        base, {"q50_exact": 0.5}, route > _QS_TYPE_ROUTE
+        base, {"q50_exact": 0.5}, route_salted(e)
     ).select("event_type", "q50_exact")
     return est.join(exact, "event_type")
 

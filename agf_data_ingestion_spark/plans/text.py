@@ -1560,20 +1560,8 @@ FROM r
 
 _CALIBRATED_DROP_FRAC = 0.30  # drop the bottom 30% of each language
 
-#: per-language doc-count guard (r11, VERDICT r10 ask #1): `lang` has 5
-#: values (en ≈ 40% of docs), so the keyed percent_rank window pushes a
-#: corpus share through one task at any scale.  Above the guard the
-#: percentile routes through salted_rank_intkey + the exact (rank-1)/
-#: (n-1) binary64 replay (operators/skew.py pct_rank_expr) — both
-#: branches bit-identical, oracle keeps the single-window form.
-#: Straddles the corpora: 218 docs in the largest lang at sf0.01 ->
-#: plain; 2059 at sf0.1 -> decomposed.
-_CAL_LANG_ROUTE = 1000
 
-
-def docs_quality_calibrated(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_quality_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relative (per-language) quality gate: an integer-derived composite
     score — lexical diversity plus stopword mass, both scaled-BIGINT floor
     ratios — is percent-ranked WITHIN each language, and a doc is kept
@@ -1583,13 +1571,15 @@ def docs_quality_calibrated(
     Determinism: the window orders by (score_micro, doc_id) so ranks are
     a total order; percent_rank = (rank-1)/(n-1) is the same
     BIGINT/BIGINT→DOUBLE division in both engines.  Scale: one map-only
-    scoring projection, then one shuffle keyed on ``lang`` — SKEW-ROUTED
-    above ``_CAL_LANG_ROUTE`` docs in the largest language (see guard
-    note) so no corpus share funnels through a single window task.
+    scoring projection, then one shuffle keyed on ``lang`` — `lang` has 5
+    values (en ≈ 40%), so at scale the percentile is SKEW-ROUTED
+    (operators/skew.py ``route_salted``) through salted_rank_intkey plus
+    the exact (rank-1)/(n-1) binary64 replay ``pct_rank_expr``, which
+    matches the single-window form the oracle keeps.
     """
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
         pct_rank_expr,
+        route_salted,
         salted_rank_intkey,
     )
 
@@ -1612,10 +1602,7 @@ def docs_quality_calibrated(
             " + (1000000 * cast(n_stop as bigint)) div n_words"
         ).alias("score_micro"),
     )
-    route = _route if _route is not None else max_group_count(
-        d.select("lang"), "lang"
-    )
-    if route > _CAL_LANG_ROUTE:
+    if route_salted(d):
         # narrow per-doc frame, multiply consumed by the decomposition
         scored = scored.cache()
         ranked = salted_rank_intkey(scored, ["lang"], "score_micro", "doc_id")

@@ -214,21 +214,8 @@ GROUP BY {_SPLIT_CASE_SQL}
 
 _EPOCHS = 2
 
-#: corpus-size guard for the per-epoch permutation rank (r11): `epoch`
-#: has TWO values, so the keyed window funnels the whole corpus through
-#: two tasks at any scale.  Above the guard the rank routes through the
-#: hex-prefix salted decomposition (operators/skew.py
-#: salted_rank_hexkey — the md5 order key is uniform, so 256 cells per
-#: epoch balance evenly); row_number over a total order is
-#: decomposition-exact, so the oracle keeps the single-window form.
-#: Straddles the corpora: 500 docs at sf0.01 -> plain, 5000 at sf0.1
-#: -> decomposed.
-_EPOCH_ROUTE = 1000
 
-
-def docs_epoch_order(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic multi-epoch training order: each epoch is an
     independent pseudo-random permutation of the corpus, derived from
     ``md5(epoch:doc_id)`` — reproducible on any cluster, resumable from
@@ -238,10 +225,17 @@ def docs_epoch_order(
     (epoch, position, doc_id) once and every trainer rank reads its
     stripe — no shared-memory shuffle buffer, no coordination.
 
-    Ties are impossible (md5 collisions aside) so the order is total;
-    the per-epoch rank is SKEW-ROUTED above ``_EPOCH_ROUTE`` docs (see
-    guard note)."""
-    from agf_data_ingestion_spark.operators.skew import salted_rank_hexkey
+    Ties are impossible (md5 collisions aside) so the order is total.
+    `epoch` has TWO values, so the keyed window funnels the whole corpus
+    through two tasks; at scale the rank is SKEW-ROUTED
+    (operators/skew.py ``route_salted``) through the hex-prefix
+    decomposition ``salted_rank_hexkey`` — the md5 order key is uniform,
+    so 256 cells per epoch balance evenly, and row_number over a total
+    order is decomposition-exact."""
+    from agf_data_ingestion_spark.operators.skew import (
+        route_salted,
+        salted_rank_hexkey,
+    )
 
     d = t(spark, sf_dir, "documents")
     epochs = F.explode(F.array(*[F.lit(i) for i in range(_EPOCHS)])).alias("epoch")
@@ -251,8 +245,7 @@ def docs_epoch_order(
         16,
     )
     base = d.select("doc_id", epochs).withColumn("h", h)
-    route = _route if _route is not None else d.count()
-    if route > _EPOCH_ROUTE:
+    if route_salted(d):
         ranked = salted_rank_hexkey(
             base, ["epoch"], "h", "doc_id", out_rank="rn_g"
         ).drop("n_part")
@@ -282,43 +275,28 @@ FROM documents, unnest(range(0, {_EPOCHS})) AS u(epoch)
 
 _BUDGET = 2000  # tokens per pack
 
-#: per-language doc-count guard (r11, VERDICT r10 ask #1): `lang` has
-#: FIVE values in this corpus (en ≈ 40%) — every language partition is a
-#: corpus-share through ONE window task at any scale.  Above the guard
-#: the running sum routes through the salted-cell decomposition
-#: (operators/skew.py salted_prefix_sum_intkey); integer adds are
-#: order-free so both branches are bit-identical and the oracle keeps
-#: the single-window form.  The threshold straddles the generated
-#: corpora (sf0.01: 218 docs in the largest lang -> plain; sf0.1:
-#: 2059 -> decomposed) so both branches stay oracle-exercised.
-_LANG_ROUTE = 1000
 
-
-def docs_token_packing(
-    spark: SparkSession, sf_dir: str, _route: int | None = None
-) -> DataFrame:
+def docs_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign documents (in doc_id order, per language) to sequential packs
     of ~_BUDGET whitespace tokens: pack = floor(running_token_count /
     budget).  The streaming-friendly approximation of bin packing — no
     driver loop; exact integer arithmetic on both engines.
 
-    Scale shape (r11): the per-language running sum is SKEW-ROUTED —
-    at or below ``_LANG_ROUTE`` docs in the largest language it is one
-    keyed window; above, ``salted_prefix_sum_intkey`` (rank within
-    (lang, doc_id-range salt) cells + cell-total offsets — doc_id is
-    unique, so no tiebreaker)."""
+    Scale shape (r11): `lang` has FIVE values (en ≈ 40%), so the
+    per-language running sum is SKEW-ROUTED (operators/skew.py
+    ``route_salted``) — one keyed window below the rule's size, else
+    ``salted_prefix_sum_intkey`` (rank within (lang, doc_id-range salt)
+    cells + cell-total offsets — doc_id is unique, so no tiebreaker;
+    integer adds are order-free, so both plans are bit-identical)."""
     from agf_data_ingestion_spark.operators.skew import (
-        max_group_count,
+        route_salted,
         salted_prefix_sum_intkey,
     )
 
     d = t(spark, sf_dir, "documents")
     tokens = F.size(F.split("text", " "))
     base = d.select("doc_id", "lang", tokens.alias("n_tokens"))
-    route = _route if _route is not None else max_group_count(
-        d.select("lang"), "lang"
-    )
-    if route > _LANG_ROUTE:
+    if route_salted(d):
         base = base.cache()  # narrow; bounds agg + both salted branches
         cummed = salted_prefix_sum_intkey(
             base, ["lang"], "n_tokens", "doc_id", out_col="_cum"

@@ -145,19 +145,20 @@ def main() -> None:
         "plans/text.py).",
         "",
     ]
-    import inspect
+    from agf_data_ingestion_spark.operators import skew
 
+    rule = skew.route_salted
     for name in HEADLINERS:
-        fn = QUERIES[name].fn
-        kwargs = {}
-        note = ""
         # r11: skew-routed queries show their DECOMPOSED (at-scale) plan —
-        # that is the shape a 100 TB corpus runs; the plain branch is the
-        # small-input fallback
-        if "_route" in inspect.signature(fn).parameters:
-            kwargs["_route"] = 10**9
-            note = " (decomposed skew-routed branch — the at-scale plan)"
-        df = fn(spark, sf_dir, **kwargs)
+        # that is the shape a 100 TB corpus runs; the plain window is the
+        # small-input plan
+        routed = []
+        skew.route_salted = lambda corpus: routed.append(corpus) or True
+        try:
+            df = QUERIES[name].fn(spark, sf_dir)
+        finally:
+            skew.route_salted = rule
+        note = " (decomposed skew-routed branch — the at-scale plan)" if routed else ""
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}{note}", "", "```", _summarize(plan), "```", ""]
     spark.catalog.clearCache()

@@ -5,10 +5,9 @@ coarsely), then attribute the quality_cut stage's wall to its blocking
 pieces:
 
   Q1  pick_cut_tile       — the 19-row PR-curve collect (rides _bg cache)
-  Q2  route guard         — max_group_count(docs.lang) job
-  Q3  thresholds collect  — forces score_quality (real-text bigram scan)
+  Q2  thresholds collect  — forces score_quality (real-text bigram scan)
       + the tile rank for the thresholds aggregate
-  Q4  survivors checkpoint — the docs semi-join + localCheckpoint+count
+  Q3  survivors checkpoint — the docs semi-join + localCheckpoint+count
       (re-executes the tile plan unless it is shared)
 
 Usage: python scripts/r13_qcut_profile.py [reps]
@@ -64,23 +63,15 @@ def main() -> None:
         cut = C.pick_cut_tile(spark, sf_dir)
         ph["Q1_pick_cut_tile"] = round(time.time() - ts, 3)
 
-        from agf_data_ingestion_spark.operators.skew import max_group_count
-
         ts = time.time()
-        route = max_group_count(docs.select("lang"), "lang")
-        ph["Q2_route_guard"] = round(time.time() - ts, 3)
-
-        ts = time.time()
-        cut_docs, thresholds = C.stage_quality_cut(
-            spark, sf_dir, docs, cut, _route=route
-        )
+        cut_docs, thresholds = C.stage_quality_cut(spark, sf_dir, docs, cut)
         thresh_rows = {r["lang"]: int(r["value"]) for r in thresholds.collect()}
-        ph["Q3_thresholds_collect"] = round(time.time() - ts, 3)
+        ph["Q2_thresholds_collect"] = round(time.time() - ts, 3)
 
         ts = time.time()
         out = cut_docs.select(*C._DOC_COLS).localCheckpoint(eager=True)
         n_out = out.count()
-        ph["Q4_survivors_checkpoint"] = round(time.time() - ts, 3)
+        ph["Q3_survivors_checkpoint"] = round(time.time() - ts, 3)
         ph["quality_cut_total"] = round(time.time() - tq, 3)
         print(
             json.dumps(
@@ -89,7 +80,6 @@ def main() -> None:
                     "n_in": n_in,
                     "n_out": n_out,
                     "cut": cut,
-                    "route": route,
                     "n_langs_thresh": len(thresh_rows),
                     **ph,
                 }

@@ -53,3 +53,12 @@ def lake(tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake"))
     n_runs, n_exps = generate(root)
     return {"root": root, "n_runs": n_runs, "n_exps": n_exps}
+
+
+@pytest.fixture
+def salted(monkeypatch):
+    """Force every skew-routed window onto its at-scale salted plan by
+    patching the one routing rule (operators/skew.py ``route_salted``)."""
+    from agf_data_ingestion_spark.operators import skew
+
+    monkeypatch.setattr(skew, "route_salted", lambda corpus: True)

@@ -309,17 +309,26 @@ def test_packing_single_bucket_exchange(spark):
     assert "bucket" in ex[0], ex[0]
 
 
-def test_reweighted_shards_no_single_partition_window(spark):
+def test_reweighted_shards_no_single_partition_window(spark, monkeypatch):
     """r10 (VERDICT r9 ask #1 'Done'): the WFQ stream's running sums are
     exchange-safe — the executed row-stream plan carries NO
     ``Window.partitionBy(lit(1))``-shaped single-partition sort (the one
     legitimate ``Exchange SinglePartition`` is the 1-row horizon
     aggregate), every window is keyed, the salted decomposition actually
-    engages on the forced-decomposed branch, and BOTH branches produce
-    bit-identical cumsums and shard assignments (ask #2's routing)."""
+    engages when the skew rule is forced, and the salted plan produces
+    cumsums and shard assignments bit-identical to the default plan."""
+    from agf_data_ingestion_spark.operators import skew
     from agf_data_ingestion_spark.plans.mixing import _rws_stream, _rws_ts
 
-    ts = _rws_ts(spark, SF, _route=101)  # force the decomposed branch
+    cols = ["doc_id", "shard_id", "global_pos"]
+    plain = sorted(
+        (r["doc_id"], r["cum"])
+        for r in _rws_ts(spark, SF).select("doc_id", "cum").collect()
+    )
+    plain_shards = sorted(map(tuple, _rws_stream(spark, SF).select(cols).collect()))
+
+    monkeypatch.setattr(skew, "route_salted", lambda corpus: True)
+    ts = _rws_ts(spark, SF)
     dec = sorted((r["doc_id"], r["cum"]) for r in ts.collect())
     plan = ts._jdf.queryExecution().executedPlan().toString()
     # every CORPUS-shaped window (the n_tokens running sums) must be
@@ -332,31 +341,25 @@ def test_reweighted_shards_no_single_partition_window(spark):
             assert "source" in line, line
     assert "windowspecdefinition(1," not in plan, plan
     assert "_salt" in plan, plan  # the decomposition engaged
-
-    plain = sorted(
-        (r["doc_id"], r["cum"])
-        for r in _rws_ts(spark, SF, _route=0).select("doc_id", "cum").collect()
-    )
     assert dec == plain
 
     # end-to-end: the two-pass prefix sum gives identical shard ids and
-    # positions through both per-source branches
-    cols = ["doc_id", "shard_id", "global_pos"]
-    a = sorted(map(tuple, _rws_stream(spark, SF, _route=101).select(cols).collect()))
-    b = sorted(map(tuple, _rws_stream(spark, SF, _route=0).select(cols).collect()))
-    assert a == b
+    # positions through both per-source plans
+    salted_shards = sorted(map(tuple, _rws_stream(spark, SF).select(cols).collect()))
+    assert salted_shards == plain_shards
 
 
-def test_curriculum_decomposed_plan_keyed(spark):
+def test_curriculum_decomposed_plan_keyed(spark, salted):
     """r10 (VERDICT r9 ask #2): the forced-decomposed curriculum plan
     carries only KEYED windows — the per-source percentile runs in
     (source, difficulty-range salt) cells, never one whole-source
     partition — and the salt actually engages."""
     from agf_data_ingestion_spark.plans.lm import docs_curriculum_order
 
-    df = docs_curriculum_order(spark, SF, _route=101)
+    df = docs_curriculum_order(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()  # the salted plan caches its per-doc frame
     assert "_salt" in plan, plan  # the decomposition engaged
     for line in plan.splitlines():
         if "windowspecdefinition" in line and "difficulty" in line:

@@ -26,12 +26,11 @@ A Window partitioned only by bad keys is acceptable exactly when:
 Known blind spot: an eager ``localCheckpoint`` at plan-build time
 (operators/shards.py assign_shards) truncates the visible plan — windows
 upstream of the checkpoint are invisible here.  Those paths carry their
-own routing guards and plan pins (tests/test_plan_shapes.py).
+own plan pins (tests/test_plan_shapes.py).
 """
 
 from __future__ import annotations
 
-import inspect
 import signal
 from contextlib import contextmanager
 
@@ -135,7 +134,7 @@ def _deadline(seconds: int):
         signal.signal(signal.SIGALRM, prev)
 
 
-def test_no_unrouted_corpus_windows_on_low_card_keys(spark):
+def test_no_unrouted_corpus_windows_on_low_card_keys(spark, salted):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -146,14 +145,11 @@ def test_no_unrouted_corpus_windows_on_low_card_keys(spark):
     failures = {}
     errors = {}
     with _deadline(1200):
+        # ``salted`` forces every routed window onto its decomposed
+        # (at-scale) plan: the sweep must see the plan a 100 TB corpus runs
         for name, fn in sorted(mod.queries().items()):
-            kwargs = {}
             try:
-                if "_route" in inspect.signature(fn).parameters:
-                    # force the decomposed (at-scale) branch: the sweep must
-                    # see the plan a 100 TB corpus would run
-                    kwargs["_route"] = 10**9
-                df = fn(spark, _SF, **kwargs)
+                df = fn(spark, _SF)
                 bad = _violations(df)
             except Exception as e:  # noqa: BLE001 — collect, report all at once
                 errors[name] = repr(e)[:200]
@@ -247,7 +243,7 @@ def test_registry_covers_every_production_window():
     )
 
 
-def test_no_unrouted_windows_in_registered_builders(spark):
+def test_no_unrouted_windows_in_registered_builders(spark, salted):
     """Walk every registered production frame's optimized plan with the
     SAME rules as the catalog sweep (BAD_KEYS / WindowGroupLimit /
     salt-cell), builders forced onto their at-scale branches."""

@@ -115,48 +115,6 @@ def test_salted_rank_intkey_equals_single_window(spark):
     assert dec == plain
 
 
-def test_curriculum_routing_branches_identical(spark):
-    """Both curriculum branches (plain percent_rank window vs the
-    salted-rank decomposition) produce the identical result frame —
-    the oracle keeps the single-window SQL for both."""
-    from agf_data_ingestion_spark.plans.lm import docs_curriculum_order
-
-    sf = "/root/testdata/sf0.001"
-    a = sorted(map(tuple, docs_curriculum_order(spark, sf, _route=0).collect()))
-    b = sorted(map(tuple, docs_curriculum_order(spark, sf, _route=101).collect()))
-    assert a == b
-
-
-def test_weighted_interleave_routing_branches_identical(spark):
-    """weighted_interleave's skew-routed cumsum: forced-decomposed ≡
-    forced-plain on the catalog corpus (order keys, virtual times, and
-    the horizon cut all downstream of the cumsum)."""
-    from agf_data_ingestion_spark.operators.shards import weighted_interleave
-    from agf_data_ingestion_spark.plans.base import t as _t
-
-    docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    wts = spark.createDataFrame(
-        [(f"src{i}", 1_000_000 + 37 * i) for i in range(20)],
-        "source string, weight_ppm long",
-    )
-    cols = ["doc_id", "_t", "_wfq"]
-    a = sorted(
-        map(
-            tuple,
-            weighted_interleave(docs, wts, source_route=0).select(cols).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            weighted_interleave(docs, wts, source_route=10**9)
-            .select(cols)
-            .collect(),
-        )
-    )
-    assert a == b
-
-
 _HYPO = pytest.importorskip("hypothesis")
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
@@ -313,71 +271,6 @@ def test_incremental_neardup_corpus_bucket_cap(spark, tmp_path):
     assert all(r["dup_of"] % 5 != 0 for r in rows)
 
 
-# ---------------------------------------------------------------------------
-# r11 (VERDICT r10 ask #1): the six remaining whole-partition corpus
-# windows — forced-decomposed ≡ forced-plain on the catalog corpus, and
-# the new primitives property-tested against pure-Python re-statements.
-# ---------------------------------------------------------------------------
-
-_SF = "/root/testdata/sf0.001"
-
-
-def _both_routes(fn, spark, lo=0, hi=10**9):
-    a = sorted(map(tuple, fn(spark, _SF, _route=lo).collect()))
-    b = sorted(map(tuple, fn(spark, _SF, _route=hi).collect()))
-    # decomposed branches cache() narrow frames; don't leak entries into
-    # later tests' plan pins (CacheManager dedupes across tests)
-    spark.catalog.clearCache()
-    assert a == b
-    assert len(a) > 0
-
-
-def test_token_packing_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.training_data import docs_token_packing
-
-    _both_routes(docs_token_packing, spark)
-
-
-def test_epoch_order_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.training_data import docs_epoch_order
-
-    _both_routes(docs_epoch_order, spark)
-
-
-def test_quality_calibrated_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.text import docs_quality_calibrated
-
-    _both_routes(docs_quality_calibrated, spark)
-
-
-def test_quality_apply_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.quality_model import docs_quality_apply
-
-    _both_routes(docs_quality_apply, spark)
-
-
-def test_pr_curve_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.quality_model import (
-        docs_quality_pr_curve,
-    )
-
-    _both_routes(docs_quality_pr_curve, spark)
-
-
-def test_preference_pairs_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.quality_model import (
-        docs_preference_pairs,
-    )
-
-    _both_routes(docs_preference_pairs, spark)
-
-
-def test_lm_buckets_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.lm import docs_lm_buckets
-
-    _both_routes(docs_lm_buckets, spark)
-
-
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=_ROWS)
 def test_salted_prefix_sum_intkey_property(spark, rows):
@@ -492,57 +385,6 @@ def test_ntile_and_pct_rank_exprs_match_builtins(spark, rows, tiles):
         ).collect()
     }
     assert got == plain
-
-
-def test_name_collision_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.analytics import docs_name_collision
-
-    _both_routes(docs_name_collision, spark)
-
-
-def test_median_value_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.analytics import events_median_value
-
-    _both_routes(events_median_value, spark)
-
-
-def test_mad_outliers_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.analytics import events_mad_outliers
-
-    _both_routes(events_mad_outliers, spark)
-
-
-def test_stage_quality_cut_routing_branches_identical(spark):
-    """The PRODUCTION release quality-cut ntile (inside curate_full,
-    invisible to the catalog plan sweep) — forced-decomposed ≡
-    forced-plain: same survivor set, same frozen per-language
-    thresholds."""
-    from agf_data_ingestion_spark.operators.curation import stage_quality_cut
-    from agf_data_ingestion_spark.plans.base import t as _t
-
-    docs = _t(spark, _SF, "documents")
-    out = {}
-    for route in (0, 10**9):
-        surv, thr = stage_quality_cut(spark, _SF, docs, 12, _route=route)
-        out[route] = (
-            sorted(r["doc_id"] for r in surv.select("doc_id").collect()),
-            sorted(map(tuple, thr.collect())),
-        )
-    spark.catalog.clearCache()
-    assert out[0] == out[10**9]
-    assert out[0][0] and out[0][1]
-
-
-def test_quantile_sketch_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.sketches import events_quantile_sketch
-
-    _both_routes(events_quantile_sketch, spark)
-
-
-def test_zip_manifest_routing_branches_identical(spark):
-    from agf_data_ingestion_spark.plans.media import docs_export_zip_manifest
-
-    _both_routes(docs_export_zip_manifest, spark)
 
 
 def test_salted_rank_dblkey_nulls_last(spark):
@@ -714,3 +556,219 @@ def test_salted_prefix_sum_out_col_guard(spark):
         salted_prefix_sum(df, ["p"], "v", "h", "t", out_col="_salt")
     with pytest.raises(ValueError, match="_salt"):
         salted_prefix_sum_intkey(df, ["p"], "v", "t", None, out_col="_lcum")
+
+
+# ---------------------------------------------------------------------------
+# The skew-routed plans.  One rule (operators/skew.py ``route_salted``)
+# picks between the plain keyed Window and the salted decomposition; at
+# fixture scale it picks the Window.  These tests check both plans: the
+# default one, and the salted one forced by patching the rule, against each
+# catalog query's DuckDB oracle, or against each other for an operator.
+# ---------------------------------------------------------------------------
+
+import pandas as pd  # noqa: E402
+from test_entry_oracle import SF_DIR as _SF  # noqa: E402
+from test_entry_oracle import _canon  # noqa: E402
+from test_entry_oracle import duck  # noqa: E402,F401 — a fixture
+
+import __spark_entry__ as entrymod  # noqa: E402
+
+
+def test_route_salted_follows_aqe_skew_threshold(spark):
+    """The rule reads the optimizer's size estimate against the session's
+    AQE skew threshold: the sf0.001 corpus (~65 KB) stays on the plain
+    window at the default 256 MB and salts once the threshold is below
+    its size — no Spark job either way."""
+    from agf_data_ingestion_spark.operators.skew import route_salted
+    from agf_data_ingestion_spark.plans.base import size_estimate
+    from agf_data_ingestion_spark.plans.base import t as _t
+
+    key = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
+    docs = _t(spark, _SF, "documents")
+    est = size_estimate(docs)
+    assert 0 < est < 256 << 20
+    assert not route_salted(docs)
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(est - 1))
+        assert route_salted(docs)
+        spark.conf.set(key, f"{est // 1024 + 1}KB")
+        assert not route_salted(docs)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _both_plans_match_oracle(spark, duck, monkeypatch, name):
+    from agf_data_ingestion_spark.operators import skew
+
+    rule = skew.route_salted
+    asked = []
+
+    def forced(corpus):
+        asked.append(rule(corpus))
+        return True
+
+    want = _canon(duck.execute(entrymod.oracle_sql()[name]).fetchdf())
+    assert len(want) > 0
+    default = entrymod.queries()[name](spark, _SF).toPandas()
+    monkeypatch.setattr(skew, "route_salted", forced)
+    salted = entrymod.queries()[name](spark, _SF).toPandas()
+    # the salted plans cache() narrow frames; CacheManager dedupes across
+    # tests, so leave no entries behind for later tests' plan pins
+    spark.catalog.clearCache()
+    assert asked and not any(asked), f"{name}: {asked} (fixture scale is plain)"
+    pd.testing.assert_frame_equal(_canon(default), want)
+    pd.testing.assert_frame_equal(_canon(salted), want)
+
+
+def test_reweighted_shards_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_reweighted_shards")
+
+
+def test_curriculum_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_curriculum_order")
+
+
+def test_token_packing_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_token_packing")
+
+
+def test_epoch_order_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_epoch_order")
+
+
+def test_quality_calibrated_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_quality_calibrated")
+
+
+def test_quality_apply_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_quality_apply")
+
+
+def test_pr_curve_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_quality_pr_curve")
+
+
+def test_preference_pairs_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_preference_pairs")
+
+
+def test_lm_buckets_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_lm_buckets")
+
+
+def test_name_collision_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_name_collision")
+
+
+def test_median_value_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "events_median_value")
+
+
+def test_mad_outliers_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "events_mad_outliers")
+
+
+def test_quantile_sketch_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "events_quantile_sketch")
+
+
+def test_zip_manifest_routing_branches_identical(spark, duck, monkeypatch):
+    _both_plans_match_oracle(spark, duck, monkeypatch, "docs_export_zip_manifest")
+
+
+def test_weighted_interleave_routing_branches_identical(spark, monkeypatch):
+    """weighted_interleave's skew-routed cumsum: forced-salted ≡ the
+    default plain window on the catalog corpus (order keys, virtual
+    times, and the horizon cut all downstream of the cumsum)."""
+    from agf_data_ingestion_spark.operators import skew
+    from agf_data_ingestion_spark.operators.shards import weighted_interleave
+    from agf_data_ingestion_spark.plans.base import t as _t
+
+    docs = _t(spark, _SF, "documents")
+    wts = spark.createDataFrame(
+        [(f"src{i}", 1_000_000 + 37 * i) for i in range(20)],
+        "source string, weight_ppm long",
+    )
+    cols = ["doc_id", "_t", "_wfq"]
+
+    def run():
+        return sorted(
+            map(tuple, weighted_interleave(docs, wts).select(cols).collect())
+        )
+
+    assert not skew.route_salted(docs)  # fixture scale: the plain window
+    plain = run()
+    monkeypatch.setattr(skew, "route_salted", lambda corpus: True)
+    assert run() == plain
+    assert plain
+
+
+def test_stage_quality_cut_routing_branches_identical(spark, monkeypatch):
+    """The PRODUCTION release quality-cut ntile (inside curate_full,
+    invisible to the catalog plan sweep) — forced-salted ≡ the default
+    plain window: same survivor set, same frozen per-language
+    thresholds."""
+    from agf_data_ingestion_spark.operators import skew
+    from agf_data_ingestion_spark.operators.curation import stage_quality_cut
+    from agf_data_ingestion_spark.plans.base import t as _t
+
+    docs = _t(spark, _SF, "documents")
+
+    def run():
+        surv, thr = stage_quality_cut(spark, _SF, docs, 12)
+        return (
+            sorted(r["doc_id"] for r in surv.select("doc_id").collect()),
+            sorted(map(tuple, thr.collect())),
+        )
+
+    assert not skew.route_salted(docs)  # fixture scale: the plain window
+    plain = run()
+    monkeypatch.setattr(skew, "route_salted", lambda corpus: True)
+    forced = run()
+    spark.catalog.clearCache()
+    assert forced == plain
+    assert plain[0] and plain[1]
+
+
+#: Spark jobs each skew-routed catalog query submits while its plan is
+#: BUILT, before any collect, at sf0.001: the parquet schema reads (and,
+#: for docs_reweighted_shards, the DoReMi weights and the eager shard
+#: checkpoint).  Choosing the plan reads only the optimizer's estimate;
+#: the retired per-key max-count guard added 2-9 jobs here.
+_BUILD_JOBS = {
+    "docs_reweighted_shards": 13,
+    "docs_quality_calibrated": 1,
+    "docs_epoch_order": 1,
+    "docs_token_packing": 1,
+    "docs_export_zip_manifest": 1,
+    "docs_name_collision": 1,
+    "events_median_value": 1,
+    "events_mad_outliers": 1,
+    "docs_lm_buckets": 2,
+    "docs_curriculum_order": 1,
+    "docs_quality_apply": 1,
+    "docs_quality_pr_curve": 1,
+    "docs_preference_pairs": 2,
+    "events_quantile_sketch": 1,
+}
+
+
+def test_building_routed_queries_runs_no_guard_job(spark):
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(k) for k in props]
+    got = {}
+    for name in _BUILD_JOBS:
+        spark.catalog.clearCache()
+        group = f"build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            entrymod.queries()[name](spark, _SF)
+        finally:
+            for k, v in zip(props, prev):
+                sc.setLocalProperty(k, v)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    spark.catalog.clearCache()
+    assert got == _BUILD_JOBS
